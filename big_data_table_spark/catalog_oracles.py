@@ -1,8 +1,8 @@
 """Core-catalog registration — the early relational + breadth QuerySpec
 blocks with their inline oracle SQL, split out of catalog.py (r9 VERDICT
 #2 / the repo's 2.5k-line module budget).  catalog.py re-exports this as
-the seed of ``CATALOG`` and keeps the round registration blocks and the
-driver-window lists."""
+the seed of ``CATALOG`` and keeps the round registration blocks and
+``DRIVER_HEAD``."""
 
 from __future__ import annotations
 

@@ -5,8 +5,8 @@ streaming edge, the SimHash/semantic/BM25 index families and their
 crawl/streaming arms, SemDeDup, and two-stage hybrid retrieval.
 QuerySpec registrations live HERE too (``r10_specs``, merged by
 catalog.py — the chunk convention, extended to the spec dict when
-catalog.py approached its own 2.5k module budget); the driver-window
-lists stay in catalog.py."""
+catalog.py approached its own 2.5k module budget); ``DRIVER_HEAD``
+stays in catalog.py."""
 
 from __future__ import annotations
 

@@ -9,7 +9,7 @@ rebuild-equivalence, not bit-equality — the result SHAPE changes when
 centroids re-freeze), and metadata-only expire/retention verbs for
 ALL FOUR index families (setjoin / BM25 / LSH / semantic).  QuerySpec
 registrations live HERE (``r11_specs``, merged by catalog.py — the
-chunk convention); the driver-window lists stay in catalog.py."""
+chunk convention); ``DRIVER_HEAD`` stays in catalog.py."""
 
 from __future__ import annotations
 

@@ -7,7 +7,7 @@ CHUNK-dimension retention for the day-partitioned grouped stores
 (drop batches inside retained days — the missing axis of the
 retention matrix next to ``rollup_expire``'s whole-day drops).
 QuerySpec registrations live HERE (``r12_specs``, merged by
-catalog.py — the chunk convention); the driver-window lists stay in
+catalog.py — the chunk convention); ``DRIVER_HEAD`` stays in
 catalog.py.
 
 Reference parity note: the reference (jangorecki/big.data.table,

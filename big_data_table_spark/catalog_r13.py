@@ -8,7 +8,7 @@ foreachBatch sinks write through — REFUSES a forgotten day, so a late
 at-least-once replay raises instead of silently resurrecting expired
 data (the ``chunk_expire`` discipline completed along the day axis).
 QuerySpec registrations live HERE (``r13_specs``, merged by catalog.py
-— the chunk convention); the driver-window lists stay in catalog.py.
+— the chunk convention); ``DRIVER_HEAD`` stays in catalog.py.
 
 Reference parity note: the reference (jangorecki/big.data.table,
 R/big.data.table.R:1-648) has no persisted stores — this is declared

@@ -13,7 +13,7 @@ block-constant even-gray model that makes the baseline chain exact
 exact too, for ANY scan script.
 
 QuerySpec registrations live HERE (``r14_specs``, merged by
-catalog_windows.py — the chunk convention).
+catalog.py — the chunk convention).
 
 Reference parity note: the reference (jangorecki/big.data.table,
 R/big.data.table.R:1-648) has no media surface — this is declared
@@ -80,7 +80,7 @@ FROM v GROUP BY doc_id, width, height
 
 def r14_specs():
     """Round-14 QuerySpec registrations, merged into the catalog by
-    catalog_windows.py (the chunk convention)."""
+    catalog.py (the chunk convention)."""
     from .catalog_base import QuerySpec
 
     return {

@@ -12,7 +12,7 @@ tests/test_round15.py); the catalog entry proves the RGB VIEW of the
 whole chain against a closed-form SQL oracle.
 
 QuerySpec registrations live HERE (``r15_specs``, merged by
-catalog_windows.py — the chunk convention).
+catalog.py — the chunk convention).
 
 Reference parity note: the reference (jangorecki/big.data.table,
 R/big.data.table.R:1-648) has no media surface — this is declared
@@ -212,7 +212,7 @@ FROM v GROUP BY doc_id, color_type, width, height
 
 def r15_specs():
     """Round-15 QuerySpec registrations, merged into the catalog by
-    catalog_windows.py (the chunk convention)."""
+    catalog.py (the chunk convention)."""
     from .catalog_base import QuerySpec
 
     return {

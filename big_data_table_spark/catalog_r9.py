@@ -2,7 +2,7 @@
 reports (transition structure, language mix), corpus-health calibration
 tables (boilerplate mining, token diversity, SimHash hamming
 calibration, embedding anisotropy), and classic seasonality/migration
-analytics.  Builders only — registration and driver-window ordering
+analytics.  Builders only — registration and ``DRIVER_HEAD``
 stay in catalog.py (the r8 split's convention).
 
 Every builder is dual-dialect (one algorithm, two SQL texts) except

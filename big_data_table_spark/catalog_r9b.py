@@ -8,7 +8,7 @@ graph (degree-oriented triangles, BFS hops vs a recursive-CTE oracle),
 the two-phase exact weighted median, gaps-and-islands streaks, the
 chi-square independence test, the clamped-ledger window closed form,
 and the join-key skew diagnostic.  Builders only — registration and
-driver-window ordering stay in catalog.py (the r8 split's convention).
+``DRIVER_HEAD`` stay in catalog.py (the r8 split's convention).
 
 Engine facts these builders rely on (probed this round, both engines):
 ``UNPIVOT (v FOR k IN (...))`` parses with IDENTICAL text in Spark 4

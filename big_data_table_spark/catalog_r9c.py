@@ -6,8 +6,8 @@ operators/graph.py), a Kaplan-Meier repurchase survival curve, lagged
 cross-correlation of two daily series, CUSUM changepoint detection,
 per-segment OLS revenue trend, the correlated-scalar-subquery surface,
 a value-grain EXACT equi-depth histogram, and a Benford leading-digit
-deviation report.  Builders only — registration and driver-window
-ordering stay in catalog.py (the r8 split's convention).
+deviation report.  Builders only — registration and ``DRIVER_HEAD``
+stay in catalog.py (the r8 split's convention).
 
 Engine facts these builders rely on (probed this session, both engines):
 ``BIT_OR``/``BIT_AND`` aggregates, ``bit_count``, ``<<``, ``&``, ``|``,

@@ -1533,11 +1533,13 @@ WHERE GREATEST(s.n, b.n) <= 2 * LEAST(s.n, b.n)
     ).localCheckpoint(eager=True)
     # broadcast guard (r16 VERDICT #6): exact candidate-doc set-size sum
     # over the checkpointed candidates — cheap, and the safe direction
-    # is a fallback to AQE-planned joins, never a forced huge broadcast
+    # is a fallback to AQE-planned joins, never a forced huge broadcast.
+    # Grouped per side: a batch doc that shares a store doc's id is a
+    # second set, so it must add its own size
     est = (
-        cand.select(F.col("cdoc").alias("d"), F.col("n_c").alias("n"))
-        .union(cand.select(F.col("bdoc").alias("d"), F.col("n_b").alias("n")))
-        .groupBy("d")
+        cand.selectExpr("0 AS side", "cdoc AS d", "n_c AS n")
+        .union(cand.selectExpr("1 AS side", "bdoc AS d", "n_b AS n"))
+        .groupBy("side", "d")
         .agg(F.max("n").alias("n"))
         .agg(F.sum("n"))
         .collect()[0][0]

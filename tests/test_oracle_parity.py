@@ -32,6 +32,18 @@ def test_no_rows_only_entries():
     assert ROWS_ONLY_QUERIES == []
 
 
+def test_driver_head_leads_catalog():
+    """The correctness driver samples the first 50 ``queries()`` keys;
+    that window is ``DRIVER_HEAD``.  The catalog holds 369 entries and
+    every oracle key names a query."""
+    from big_data_table_spark.catalog import DRIVER_HEAD, oracle_sql, queries
+
+    assert list(CATALOG)[:50] == list(DRIVER_HEAD)
+    assert len(DRIVER_HEAD) == len(set(DRIVER_HEAD)) == 50
+    assert len(CATALOG) == 369
+    assert set(oracle_sql()) <= set(queries())
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -1,9 +1,8 @@
 """Round-10 pins.
 
-1. COVERAGE.md completeness — every catalog entry must appear in the
-   coverage narrative (r9 VERDICT found 6 holes; this makes the check
-   scriptable and permanent).
-2. Driver-window staging invariants for the r10 window.
+COVERAGE.md completeness — every catalog entry must appear in the
+coverage narrative (r9 VERDICT found 6 holes; this makes the check
+scriptable and permanent).
 """
 
 from __future__ import annotations
@@ -159,19 +158,6 @@ def test_mg_grouped_chunked_bounds_contain_truth(spark, sf_dir, tmp_path):
 
     with pytest.raises(ValueError, match="reserved"):
         MG.mg_rollup_grouped_append_batch(ev, path, -1)
-
-
-def test_r10_window_staging():
-    # r11 re-staged the window head (catalog.py _R11_FRONT); the r10
-    # lists remain the provenance record: FRONT was _R9_NEXT[:50] and
-    # NEXT the 33 spill-overs + 16 r10-new, disjoint and all present.
-    keys = set(catalog.queries())
-    assert len(catalog._R10_FRONT) == 50
-    assert len(catalog._R10_NEXT) == 49
-    assert not set(catalog._R10_FRONT) & set(catalog._R10_NEXT)
-    assert set(catalog._R10_FRONT + catalog._R10_NEXT) <= keys
-    # every oracle key matches a query key, 1:1
-    assert set(catalog.oracle_sql()) <= set(catalog.queries())
 
 
 def test_bitmap_tombstone_laws(spark, sf_dir, tmp_path):

@@ -1,31 +1,13 @@
 """Round-11 pins.
 
-1. LSH-index tombstone deletion laws (the fifth and final
-   doc-id-bearing store family to gain right-to-be-forgotten; the r11
-   ownership-row layout made it possible — r10 VERDICT #2).
-2. Driver-window staging invariants for the r11 window.
+LSH-index tombstone deletion laws (the fifth and final doc-id-bearing
+store family to gain right-to-be-forgotten; the r11 ownership-row
+layout made it possible — r10 VERDICT #2).
 """
 
 from __future__ import annotations
 
 import os
-
-from big_data_table_spark import catalog
-
-
-def test_r11_window_staging():
-    # r12 re-staged the window head (catalog.py _R12_FRONT); the r11
-    # lists remain the provenance record: FRONT was the 49 r10
-    # spill-overs + the stalest refresh, NEXT the 8 r11-new entries.
-    keys = set(catalog.queries())
-    assert len(catalog._R11_FRONT) == 50
-    assert catalog._R11_FRONT[:49] == catalog._R10_NEXT
-    assert catalog._R11_FRONT[49] == "range_join_prices"
-    assert len(catalog._R11_NEXT) == 8
-    assert not set(catalog._R11_FRONT) & set(catalog._R11_NEXT)
-    assert set(catalog._R11_FRONT + catalog._R11_NEXT) <= keys
-    # every oracle key matches a query key, 1:1
-    assert set(catalog.oracle_sql()) <= set(catalog.queries())
 
 
 def test_lsh_index_tombstone_purge_laws(spark, sf_dir, tmp_path):

@@ -178,23 +178,6 @@ def test_bitmap_compact_purge_multifile_neutral(spark, tmp_path):
     assert rows() == scrubbed
 
 
-def test_r12_window_staging():
-    """Provenance pin (the r10/r11 precedent): the r12 window has been
-    DRIVEN (CORRECTNESS_r12 is 50/50 green on exactly _R12_FRONT), so
-    the lists remain the provenance record while the live CATALOG
-    ordering now leads with _R13_FRONT (pinned in test_round13)."""
-    from big_data_table_spark import catalog
-
-    keys = set(catalog.queries())
-    assert len(catalog._R12_FRONT) == 50
-    assert catalog._R12_FRONT[:8] == catalog._R11_NEXT
-    assert catalog._R12_FRONT[8:] == catalog._R5_STALE[:42]
-    assert catalog._R12_NEXT == catalog._R5_STALE[42:] + list(catalog._R12_NEW)
-    assert not set(catalog._R12_FRONT) & set(catalog._R12_NEXT)
-    assert set(catalog._R12_FRONT + catalog._R12_NEXT) <= keys
-    assert set(catalog.oracle_sql()) <= set(catalog.queries())
-
-
 def test_ivf_requantize_laws(spark, sf_dir, tmp_path):
     """IVF store retrain laws (the semantic requantize pin set applied
     to the ANN family): (1) deleting unseen ids is a no-op and a

@@ -15,7 +15,6 @@
    FileNotFoundError suppression, the low-cardinality leading-key
    fallback in ``write_store_relation``, and ``pq_fit``'s subspace-0
    contract fallback.
-3. The r13 driver-window staging invariants.
 """
 
 from __future__ import annotations
@@ -566,26 +565,3 @@ def test_bilinear_resize_laws():
     assert len(up) == 31 * 23 * 3
     with pytest.raises(ValueError, match="unsupported image container"):
         resize_image(b"GIF89a....", 4, 4)
-
-
-def test_r13_window_staging():
-    """Driver-window staging invariants for round 13 (VERDICT r12 #2):
-    the window leads with the 12 entries of _R12_NEXT — the only ones
-    without a driver CORRECTNESS row (7 r12-new) or whose newest row is
-    round 5 (5 spill-overs) — then the NEW r13 entries (VERDICT #1:
-    rollup_day_retention needs a driver row this round), then the
-    stalest r6-window refreshes filling the 50 slots; the remaining
-    r6-stale entries spill to _R13_NEXT.  The r13 window WAS DRIVEN
-    (CORRECTNESS_r13 is 50/50 green on exactly _R13_FRONT), so the
-    frozen lists stay pinned; the CATALOG iteration order now leads
-    with _R14_FRONT (pinned in test_round14)."""
-    from big_data_table_spark import catalog as C
-
-    n_new = len(C._R13_NEW)
-    assert len(C._R13_FRONT) == len(set(C._R13_FRONT)) == 50
-    assert C._R13_FRONT[:12] == C._R12_NEXT
-    assert C._R13_FRONT[12 : 12 + n_new] == C._R13_NEW
-    assert C._R13_FRONT[12 + n_new :] == C._R6_STALE[: 38 - n_new]
-    assert C._R13_NEXT == C._R6_STALE[38 - n_new :]
-    assert not set(C._R13_FRONT) & set(C._R13_NEXT)
-    assert set(C._R13_FRONT + C._R13_NEXT) <= set(C.CATALOG)

@@ -1,29 +1,23 @@
 """Round-14 pins (hygiene + hardening — VERDICT r13):
 
-1. The r14 driver-window staging invariants (VERDICT #1): _R14_FRONT =
-   _R13_NEXT (15, the only entries whose newest driver evidence
-   predates round 7) + the 35 stalest r7-window entries; the remaining
-   15 r7-stale entries spill to _R14_NEXT.  The evidence claim itself
-   is pinned against the committed CORRECTNESS artifacts.
-2. The module-budget splits (VERDICT #2): catalog staging moved to
-   catalog_windows.py, the theta store family to theta_store.py — both
-   with re-export shims so every historical import path still works.
-3. All five r13 ADVICE items: the write_store_relation cardinality
+1. The module-budget split (VERDICT #2): the theta store family moved
+   to theta_store.py, with a re-export shim so every historical import
+   path still works.
+2. All five r13 ADVICE items: the write_store_relation cardinality
    probe runs on ``sized_on`` (not the merged relation — exactly-once
    execution pinned via accumulator); decode_jpeg tolerates 0xFF fill
    bytes before markers (ISO 10918-1 B.1.1.2) and reports sync loss
    with an offset; decode_image parses ONLY the SOF0/IHDR header for
    dims; _swap_store_root touches marker files only; the
    rollup_day_retention store path is per-invocation unique.
-4. The reference's ls.str golden-shape law (VERDICT #5,
+3. The reference's ls.str golden-shape law (VERDICT #5,
    tests-02-rscl.R:66-76): exact output line count, affine in the
    resident-dataset count.
-5. bench.py's exact co-tenant CPU accounting (VERDICT #3).
+4. bench.py's exact co-tenant CPU accounting (VERDICT #3).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import pathlib
 import re
@@ -34,57 +28,7 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 # ------------------------------------------------------------------ #
-# 1. driver-window staging
-# ------------------------------------------------------------------ #
-
-
-def test_r14_window_staging():
-    """Driver-window staging invariants for round 14 (VERDICT r13 #1):
-    the window is EXACTLY as prescribed — _R13_NEXT (15) + the 35
-    stalest r7-window entries in catalog order; the remaining 15 spill
-    to _R14_NEXT, followed by the one NEW r14 entry (the r12
-    precedent: new entries take their driver row next round).  CATALOG
-    iteration order leads with the window."""
-    from big_data_table_spark import catalog as C
-
-    assert len(C._R14_FRONT) == len(set(C._R14_FRONT)) == 50
-    assert C._R14_FRONT[:15] == C._R13_NEXT
-    assert len(C._R7_STALE) == len(set(C._R7_STALE)) == 50
-    assert C._R14_FRONT[15:] == C._R7_STALE[:35]
-    assert C._R14_NEXT == C._R7_STALE[35:] + C._R14_NEW
-    assert C._R14_NEW == ["multimodal_jpeg_progressive"]
-    assert not set(C._R14_FRONT) & set(C._R14_NEXT)
-    assert set(C._R14_FRONT + C._R14_NEXT) <= set(C.CATALOG)
-    # (the live-head assert `list(CATALOG)[:50] == _R14_FRONT` migrated
-    # to test_round15 — each round's ordering supersedes the last, so
-    # only the NEWEST window owns the iteration-order pin)
-
-
-def test_r14_stale_evidence_claim():
-    """The staging rationale, verified against the committed driver
-    artifacts: every _R7_STALE name has a green CORRECTNESS_r07 row and
-    NO row in any later round (r8-r13) — they really are the stalest
-    evidence; and _R13_NEXT ∪ _R7_STALE is exactly the set of entries
-    whose newest driver row predates round 8."""
-    from big_data_table_spark import catalog as C
-
-    def rows(r):
-        return json.loads((REPO / f"CORRECTNESS_r{r:02d}.json").read_text())
-
-    later = set()
-    for r in range(8, 14):
-        later |= set(rows(r))
-    r7 = rows(7)
-    assert set(C._R7_STALE) == set(r7) - later
-    for name in C._R7_STALE:
-        assert r7[name]["hash_match"] or r7[name]["rows_match"], name
-    # _R13_NEXT is the pre-r7 tail: present in r6, absent from r7+
-    r6_later = later | set(r7)
-    assert set(C._R13_NEXT) == set(rows(6)) - r6_later
-
-
-# ------------------------------------------------------------------ #
-# 2. module-budget splits keep their import paths
+# 1. module-budget splits keep their import paths
 # ------------------------------------------------------------------ #
 
 
@@ -115,20 +59,8 @@ def test_theta_store_split_reexports():
     ), "theta_store must not import sketches at module top (circularity)"
 
 
-def test_catalog_windows_split_reexports():
-    """The round-12+ staging lists moved to catalog_windows.py;
-    catalog.py re-exports every _R* name so the law tests' historical
-    import path holds."""
-    from big_data_table_spark import catalog as C
-    from big_data_table_spark import catalog_windows as W
-
-    for name in ("_R5_STALE", "_R6_STALE", "_R7_STALE", "_R12_FRONT",
-                 "_R13_FRONT", "_R13_NEXT", "_R14_FRONT", "_R14_NEXT"):
-        assert getattr(C, name) == getattr(W, name), name
-
-
 # ------------------------------------------------------------------ #
-# 3. r13 ADVICE items
+# 2. r13 ADVICE items
 # ------------------------------------------------------------------ #
 
 
@@ -537,7 +469,7 @@ def test_jpeg_grayscale_arm():
 
 
 # ------------------------------------------------------------------ #
-# 4. ls.str golden shape (reference tests-02-rscl.R:66-76)
+# 3. ls.str golden shape (reference tests-02-rscl.R:66-76)
 # ------------------------------------------------------------------ #
 
 
@@ -570,7 +502,7 @@ def test_ls_str_print_golden_shape(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ #
-# 5. bench co-tenant CPU accounting
+# 4. bench co-tenant CPU accounting
 # ------------------------------------------------------------------ #
 
 

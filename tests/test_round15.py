@@ -1,33 +1,26 @@
 """Round-15 pins (hygiene + PNG color-type surface — VERDICT r14):
 
-1. The r15 driver-window staging invariants (VERDICT #1): _R15_FRONT =
-   _R14_NEXT (16: the 15 entries whose newest driver evidence is round
-   7 plus the never-driver-sampled `multimodal_jpeg_progressive`) + the
-   34 stalest r8-window entries; the remaining 16 r8-stale entries
-   spill to _R15_NEXT ahead of the new r15 entry.  The evidence claim
-   itself is pinned against the committed CORRECTNESS artifacts.
-2. The jpeg_codec module-budget split (VERDICT #3): the codec pair
+1. The jpeg_codec module-budget split (VERDICT #3): the codec pair
    moved to functions/jpeg_codec.py BEFORE any new media code, with a
    re-export shim keeping every historical import path (the
    theta_store precedent), and both files hold under the 2.5k budget.
-3. The r14 ADVICE item: a legal BASELINE JPEG with non-interleaved
+2. The r14 ADVICE item: a legal BASELINE JPEG with non-interleaved
    per-component scans (ns < ncomp) raises instead of consuming one
    scan as if interleaved and silently producing wrong pixels.
-4. PNG color types (VERDICT #6's named depth candidate): all five
+3. PNG color types (VERDICT #6's named depth candidate): all five
    8-bit layouts — grayscale / RGB / palette / gray+alpha / RGBA — on
    both codec sides, both interlace modes.  PNG is lossless, so the
    load-bearing law is EXACT round-trip of the raw samples per color
    type (alpha and palette indices preserved); the RGB-view mapping
    and the header gates (16-bit, unknown type, missing PLTE) are
    pinned alongside.
-5. bench.py credibility loop (VERDICT #2): co-tenant re-run threshold
+4. bench.py credibility loop (VERDICT #2): co-tenant re-run threshold
    default 0.2 cores and the fixture pre-read that warms the page
    cache before any measured pass.
 """
 
 from __future__ import annotations
 
-import json
 import pathlib
 import re
 import struct
@@ -39,58 +32,7 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 # ------------------------------------------------------------------ #
-# 1. driver-window staging
-# ------------------------------------------------------------------ #
-
-
-def test_r15_window_staging():
-    """Driver-window staging invariants for round 15 (VERDICT r14 #1):
-    the window is EXACTLY as prescribed — _R14_NEXT (16) + the 34
-    stalest r8-window entries in catalog order; the remaining 16 spill
-    to _R15_NEXT, followed by the NEW r15 entries (the r12 precedent:
-    new entries take their driver row next round).  CATALOG iteration
-    order leads with the window."""
-    from big_data_table_spark import catalog as C
-
-    assert len(C._R15_FRONT) == len(set(C._R15_FRONT)) == 50
-    assert C._R15_FRONT[:16] == C._R14_NEXT
-    assert len(C._R8_STALE) == len(set(C._R8_STALE)) == 50
-    assert C._R15_FRONT[16:] == C._R8_STALE[:34]
-    assert C._R15_NEXT == C._R8_STALE[34:] + C._R15_NEW
-    assert C._R15_NEW == [
-        "multimodal_png_color_types", "multimodal_png16_decode",
-        "multimodal_jpeg12_decode",
-    ]
-    assert not set(C._R15_FRONT) & set(C._R15_NEXT)
-    assert set(C._R15_FRONT + C._R15_NEXT) <= set(C.CATALOG)
-    assert list(C.CATALOG)[:50] == C._R15_FRONT
-
-
-def test_r15_stale_evidence_claim():
-    """The staging rationale, verified against the committed driver
-    artifacts: every _R8_STALE name has a green CORRECTNESS_r08 row and
-    NO row in any later round (r9-r14) — they really are the stalest
-    evidence; and _R14_NEXT minus the r14-new entry is exactly the
-    r7-window tail (present in r7, absent from r8+)."""
-    from big_data_table_spark import catalog as C
-
-    def rows(r):
-        return json.loads((REPO / f"CORRECTNESS_r{r:02d}.json").read_text())
-
-    later = set()
-    for r in range(9, 15):
-        later |= set(rows(r))
-    r8 = rows(8)
-    assert set(C._R8_STALE) == set(r8) - later
-    for name in C._R8_STALE:
-        assert r8[name]["hash_match"] or r8[name]["rows_match"], name
-    # _R14_NEXT = the r7-window tail + the never-sampled r14 entry
-    r7_tail = set(rows(7)) - later - set(r8)
-    assert set(C._R14_NEXT) == r7_tail | {"multimodal_jpeg_progressive"}
-
-
-# ------------------------------------------------------------------ #
-# 2. jpeg_codec split keeps its import paths
+# 1. jpeg_codec split keeps its import paths
 # ------------------------------------------------------------------ #
 
 
@@ -123,7 +65,7 @@ def test_module_line_budget_after_split():
 
 
 # ------------------------------------------------------------------ #
-# 3. r14 ADVICE: multi-scan baseline JPEG raises
+# 2. r14 ADVICE: multi-scan baseline JPEG raises
 # ------------------------------------------------------------------ #
 
 
@@ -154,7 +96,7 @@ def test_multiscan_baseline_jpeg_raises():
 
 
 # ------------------------------------------------------------------ #
-# 4. PNG color types
+# 3. PNG color types
 # ------------------------------------------------------------------ #
 
 _PAL16 = bytes(b for k in range(16) for b in (16 * k, 16 * k + 5, 16 * k + 10))
@@ -345,7 +287,7 @@ def test_png_rgb8_signature_back_compat():
 
 
 # ------------------------------------------------------------------ #
-# 5. 12-bit (SOF1 extended sequential) JPEG
+# 4. 12-bit (SOF1 extended sequential) JPEG
 # ------------------------------------------------------------------ #
 
 
@@ -481,7 +423,7 @@ def test_jpeg12_gates_and_16bit_dqt():
 
 
 # ------------------------------------------------------------------ #
-# 6. bench credibility loop
+# 5. bench credibility loop
 # ------------------------------------------------------------------ #
 
 

@@ -143,6 +143,29 @@ def test_codebook_fold_matches_literal_and_window(spark, monkeypatch):
     }
     assert fold == lit == truth
     assert len(fold) == 90
+    # 32 subspaces x 64 codewords: every subspace is within the literal
+    # bound, so the literal path serves it (no packed-model crossJoin)
+    # however many subspaces there are, and picks the fold's ids
+    monkeypatch.setattr(C, "_ARGMIN_LITERAL_MAX_K", 64)
+    cb32 = spark.createDataFrame(
+        [(s, cid, v) for s in range(32) for cid, v in _lcg_vecs(64, 2, seed=200 + s)],
+        "s int, cid long, c array<double>",
+    )
+    subs32 = spark.createDataFrame(
+        [(i, s, v) for s in range(32) for i, v in _lcg_vecs(4, 2, seed=300 + s)],
+        "vec_id long, s int, e array<double>",
+    )
+    lit_df = C.assign_codebook(subs32, cb32)
+    plan = lit_df._jdf.queryExecution().toString()
+    assert "CrossJoin" not in plan and "BroadcastNestedLoopJoin" not in plan
+    lit32 = {(r["vec_id"], r["s"]): r["cid"] for r in lit_df.collect()}
+    monkeypatch.setattr(C, "_ARGMIN_LITERAL_MAX_K", 63)
+    fold32 = {
+        (r["vec_id"], r["s"]): r["cid"]
+        for r in C.assign_codebook(subs32, cb32).collect()
+    }
+    assert lit32 == fold32
+    assert len(lit32) == 128
 
 
 def test_codebook_fold_drops_unknown_subspace(spark):
@@ -206,6 +229,28 @@ def test_setjoin_probe_broadcast_guard(spark, monkeypatch, tmp_path):
     slow = sorted(map(tuple, DD.setjoin_index_probe(spark, path, probe_expr).collect()))
     assert fast == slow
     assert len(fast) > 0  # the overlap batch really produces pairs
+    # a re-crawl batch whose doc_ids collide with store docs: the
+    # estimate counts each side's set, so a threshold one below the
+    # true two-sided sum must refuse the broadcast
+    seen = []
+    verify = DD._setjoin_verify_exact
+
+    def spy(cand, sets_a, sets_b, broadcast_sets=False):
+        seen.append((cand, broadcast_sets))
+        return verify(cand, sets_a, sets_b, broadcast_sets=broadcast_sets)
+
+    monkeypatch.setattr(DD, "_setjoin_verify_exact", spy)
+    recrawl = "(SELECT * FROM _t17_docs WHERE doc_id % 2 = 0) _r"
+    DD.setjoin_index_probe(spark, path, recrawl)
+    cand = seen[-1][0]
+    side_a = cand.select("doc_a", "n_a").distinct().collect()
+    side_b = cand.select("doc_b", "n_b").distinct().collect()
+    assert {r[0] for r in side_a} & {r[0] for r in side_b}  # ids collide
+    true_est = sum(r[1] for r in side_a) + sum(r[1] for r in side_b)
+    for threshold, small in ((true_est, True), (true_est - 1, False)):
+        monkeypatch.setattr(DD, "_SETJOIN_PROBE_BROADCAST_SHINGLES", threshold)
+        DD.setjoin_index_probe(spark, path, recrawl)
+        assert seen[-1][1] is small, threshold
 
 
 def _sj_pairs_sorted(spark, path):
