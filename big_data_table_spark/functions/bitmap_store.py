@@ -39,6 +39,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .store_layout import (
+    _check_append_chunk,
+    _guard_expired_days,
+    _mark_compacted_chunks,
+    _recover_stranded_days,
+    compact_day,
+    staged_swap,
+    write_store_relation,
+)
+
 _WORD_BITS = 62
 
 
@@ -130,9 +140,6 @@ def bitmap_rollup_append_chunk(
     compaction verb (the store-matrix-wide contract; for THIS store a
     collision would be absorbed by BIT_OR anyway, but the uniform rule
     keeps the verbs interchangeable across merge classes)."""
-    from .mg_store import _check_append_chunk
-    from .store_layout import _guard_expired_days
-
     _check_append_chunk(chunk)
     rows = _guard_expired_days(
         bitmap_day_rows(ev_chunk, chunk, value_col, ts_col), path
@@ -160,38 +167,23 @@ def bitmap_rollup_compact(
     RESERVED ``chunk=-1`` (<= ceil(max_id/62) rows per word;
     appenders reject negative ids, so no append collides with it).  The range-read algebra is
     bit-identical before and after — BIT_OR is associative, so merging
-    chunks early changes nothing (the store's merge law, pinned).  Same
-    dot-tmp + rename-aside swap as the other compactors
-    (single-writer).  The per-day relation is VOCABULARY cardinality
+    chunks early changes nothing (the store's merge law, pinned).  The
+    per-day relation is VOCABULARY cardinality
     (one row per distinct word), so the rewrite uses a size-derived
     file count hash-partitioned on word (``store_layout``) — 1 file at
     fixture scale, never one task for a TB vocabulary."""
-    import os
-    import shutil
-
-    from .store_layout import write_store_relation
-
-    part_dir = os.path.join(path, f"day={day}")
-    raw = spark.read.parquet(part_dir)
-    merged = raw.groupBy("word").agg(F.bit_or("bm").alias("bm"))
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_store_relation(
-        merged,
-        os.path.join(tmp, "chunk=-1"),
-        "word",
-        sized_on=raw,
-        target_file_bytes=target_file_bytes,
-    )
-    from .sketches import _swap_dir_in
-
-    _swap_dir_in(tmp, part_dir)
-    return len(
-        [
-            f
-            for f in os.listdir(os.path.join(part_dir, "chunk=-1"))
-            if f.endswith(".parquet")
-        ]
+    return compact_day(
+        spark,
+        path,
+        day,
+        lambda raw, dest: write_store_relation(
+            raw.groupBy("word").agg(F.bit_or("bm").alias("bm")),
+            dest,
+            "word",
+            sized_on=raw,
+            target_file_bytes=target_file_bytes,
+        ),
+        chunked=True,
     )
 
 
@@ -358,15 +350,13 @@ def bitmap_rollup_purge(
     mask table), and the PLAIN read after are all bit-identical
     (pinned).  This is the compliance end-state — the deleted ids'
     bits no longer exist on disk, not merely masked at read time.
-    Same dot-tmp + rename-aside swap as the compactors
-    (single-writer maintenance verb); per-day rewrites use the
-    size-derived vocabulary-cardinality layout (``store_layout``).
-    Returns the day count rewritten."""
+    Like compaction it records each day's compaction watermark first,
+    so ``chunk_expire`` refuses the merged chunks instead of silently
+    keeping their bits.  Per-day rewrites use the size-derived
+    vocabulary-cardinality layout (``store_layout``).  Returns the day
+    count rewritten."""
     import os
     import shutil
-
-    from .sketches import _swap_dir_in
-    from .store_layout import write_store_relation
 
     tomb = os.path.join(path, _TOMBSTONE_DIR)
     masks = (
@@ -375,6 +365,7 @@ def bitmap_rollup_purge(
         .agg(F.bit_or("mask").alias("mask"))
         .localCheckpoint(eager=True)
     )
+    _recover_stranded_days(path)
     days = sorted(
         d.split("=", 1)[1]
         for d in os.listdir(path)
@@ -382,26 +373,25 @@ def bitmap_rollup_purge(
     )
     for day in days:
         part_dir = os.path.join(path, f"day={day}")
-        raw = spark.read.parquet(part_dir)
-        scrubbed = (
-            raw.groupBy("word")
-            .agg(F.bit_or("bm").alias("bm"))
-            .join(F.broadcast(masks), "word", "left")
-            .select(
-                "word",
-                F.expr("bm & ~COALESCE(mask, CAST(0 AS BIGINT))").alias("bm"),
+        with staged_swap(part_dir) as (tmp,):
+            _mark_compacted_chunks(path, part_dir, scope=day)  # appender guard
+            raw = spark.read.parquet(part_dir)
+            scrubbed = (
+                raw.groupBy("word")
+                .agg(F.bit_or("bm").alias("bm"))
+                .join(F.broadcast(masks), "word", "left")
+                .select(
+                    "word",
+                    F.expr("bm & ~COALESCE(mask, CAST(0 AS BIGINT))").alias("bm"),
+                )
+                .filter(F.col("bm") != 0)  # fully-deleted words vanish
             )
-            .filter(F.col("bm") != 0)  # fully-deleted words vanish
-        )
-        tmp = os.path.join(path, f".day={day}.purge.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        write_store_relation(
-            scrubbed,
-            os.path.join(tmp, "chunk=-1"),
-            "word",
-            sized_on=raw,
-            target_file_bytes=target_file_bytes,
-        )
-        _swap_dir_in(tmp, part_dir)
+            write_store_relation(
+                scrubbed,
+                os.path.join(tmp, "chunk=-1"),
+                "word",
+                sized_on=raw,
+                target_file_bytes=target_file_bytes,
+            )
     shutil.rmtree(tomb, ignore_errors=True)
     return len(days)

@@ -451,9 +451,9 @@ def ivf_load(spark, path: str) -> tuple[DataFrame, DataFrame]:
     pre-lifecycle plan."""
     import os
 
-    from .store_layout import _read_int_marker, _recover_store_root
+    from .store_layout import _read_int_marker, _recover_aside
 
-    _recover_store_root(path)  # crashed root swap -> auto-heal (r12 ADVICE)
+    _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     inverted = spark.read.parquet(os.path.join(path, "inverted")).select(
         "vec_id", F.col("cid").cast("long").alias("cid"), "e"
@@ -574,9 +574,9 @@ def ann_pq_persisted_search(
 
     from pyspark.sql import Window
 
-    from .store_layout import _recover_store_root
+    from .store_layout import _recover_aside
 
-    _recover_store_root(path)  # crashed root swap -> auto-heal (r12 ADVICE)
+    _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
     cb = spark.read.parquet(os.path.join(path, "codebook"))
     codes = spark.read.parquet(os.path.join(path, "codes"))
     d = F.round(
@@ -713,9 +713,9 @@ def ann_ivfpq_persisted_search(
 
     from pyspark.sql import Window
 
-    from .store_layout import _recover_store_root
+    from .store_layout import _recover_aside
 
-    _recover_store_root(path)  # crashed root swap -> auto-heal (r12 ADVICE)
+    _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     cb = spark.read.parquet(os.path.join(path, "codebook"))
     codes = spark.read.parquet(os.path.join(path, "codes")).select(

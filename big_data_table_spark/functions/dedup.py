@@ -40,6 +40,13 @@ from .portable import (
     lateral_seq,
     split_ws,
 )
+from .store_layout import (
+    _read_int_marker,
+    _write_int_marker_monotone,
+    parallel_store_writes,
+    staged_swap,
+    write_store_relation,
+)
 
 # MinHash parameters: 12 hash functions in 4 bands × 3 rows.
 N_HASHES = 12
@@ -521,8 +528,6 @@ def lsh_index_build(spark, path: str, src: str) -> None:
     import os
     import shutil
 
-    from .store_layout import parallel_store_writes
-
     shutil.rmtree(path, ignore_errors=True)
     digests = spark.sql(f"SELECT DISTINCT md5(text) AS h, doc_id FROM {src}")
     bands = spark.sql(minhash_bands_sql(SPARK, src=src)).select(
@@ -549,8 +554,6 @@ def lsh_index_append(spark, path: str, src: str) -> None:
     maintenance pass."""
     import os
 
-    from .store_layout import parallel_store_writes
-
     parallel_store_writes(
         lambda: spark.sql(f"SELECT DISTINCT md5(text) AS h, doc_id FROM {src}")
         .write.mode("append")
@@ -570,29 +573,18 @@ def lsh_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> N
     accumulate, exactly as the HLL store's compaction re-MAX-merges
     register files.  Probes are unchanged before/after (they already
     read with set semantics); what compaction buys is the store's SIZE
-    and the probe-side join input going back to one row per key.  The
-    rewrite stages through dot-prefixed temp dirs (invisible to
-    concurrent parquet readers) and swaps via rename.  The digests
+    and the probe-side join input going back to one row per key.  The digests
     relation is CORPUS cardinality, so it rewrites with a size-derived
     file count hash-partitioned on doc_id (``store_layout``; r11
     VERDICT's coalesce(1) straggler fix) — 1 file at fixture scale,
     never one task for a TB store."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
-    from .store_layout import write_store_relation
-
-    from .sketches import _swap_dir_in
-    from .store_layout import parallel_store_writes
-
-    def _compact_one(sub, part):
-        cur = os.path.join(path, sub)
-        raw = spark.read.parquet(cur)
+    def _compact_one(sub, part, tmp):
+        raw = spark.read.parquet(os.path.join(path, sub))
         df = _lsh_retained(spark, path, raw).distinct()
-        tmp = os.path.join(path, f".{sub}.compact.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
         if part:
             df = df.select(
                 F.col(part).cast("int").alias(part),
@@ -606,12 +598,14 @@ def lsh_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> N
 
     # independent sub-relations: write both tmp dirs concurrently
     # (guide §2.6), swap sequentially (renames are instant)
-    parallel_store_writes(
-        lambda: _compact_one("digests", None),
-        lambda: _compact_one("bands", "band"),
-    )
-    for sub in ("digests", "bands"):
-        _swap_dir_in(os.path.join(path, f".{sub}.compact.tmp"), os.path.join(path, sub))
+    with staged_swap(os.path.join(path, "digests"), os.path.join(path, "bands")) as (
+        t_digests,
+        t_bands,
+    ):
+        parallel_store_writes(
+            lambda: _compact_one("digests", None, t_digests),
+            lambda: _compact_one("bands", "band", t_bands),
+        )
 
 
 def lsh_index_probe(spark, path: str, src: str, exclude=None):
@@ -703,15 +697,11 @@ def lsh_index_expire(path: str, before_doc_id: int) -> None:
     retained semantics; physical reclaim rides ``lsh_index_purge`` or
     the next compact.  With delete + expire, every text/embedding index
     family now carries the full lifecycle verb set."""
-    from .store_layout import _write_int_marker_monotone
-
     _write_int_marker_monotone(path, _LSH_RETENTION_FILE, before_doc_id)
 
 
 def _lsh_retained(spark, path: str, df):
     """Apply the retention cutoff (if any) to a store-side relation."""
-    from .store_layout import _read_int_marker
-
     cut = _read_int_marker(path, _LSH_RETENTION_FILE)
     if cut is not None:
         from pyspark.sql import functions as F
@@ -760,17 +750,14 @@ def lsh_index_purge(spark, path: str, target_file_bytes: int = 256 << 20) -> int
     end-state (the deleted docs' digests and bucket keys no longer
     exist on disk, not merely masked at read time).  Result-neutral:
     scrubbed-before == scrubbed-after == plain-after (pinned in
-    tests/test_round11.py).  Dot-tmp + rename swap, single-writer.
-    The digests rewrite is CORPUS cardinality — size-derived file
-    count hash-partitioned on doc_id (``store_layout``), never one
-    task.  Returns the tombstoned id count purged."""
+    tests/test_round11.py).  The digests rewrite is CORPUS cardinality
+    — size-derived file count hash-partitioned on doc_id
+    (``store_layout``), never one task.  Returns the tombstoned id
+    count purged."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
-
-    from .sketches import _swap_dir_in
-    from .store_layout import write_store_relation
 
     tomb = _lsh_tombstones(spark, path)
     if tomb is None:
@@ -779,31 +766,29 @@ def lsh_index_purge(spark, path: str, target_file_bytes: int = 256 << 20) -> int
     n = tomb.count()
     for sub, part in (("digests", None), ("bands", "band")):
         cur = os.path.join(path, sub)
-        raw = spark.read.parquet(cur)
-        kept = (
-            _lsh_retained(spark, path, raw)
-            .distinct()
-            .join(F.broadcast(tomb), "doc_id", "left_anti")
-        )
-        tmp = os.path.join(path, f".{sub}.purge.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        if part:
-            kept = kept.select(
-                F.col(part).cast("int").alias(part),
-                *[c for c in kept.columns if c != part],
-            ).localCheckpoint(eager=True)  # fully read before the swap
-            kept.repartition(part).write.mode("overwrite").partitionBy(part).parquet(
-                tmp
+        with staged_swap(cur) as (tmp,):
+            raw = spark.read.parquet(cur)
+            kept = (
+                _lsh_retained(spark, path, raw)
+                .distinct()
+                .join(F.broadcast(tomb), "doc_id", "left_anti")
             )
-        else:
-            write_store_relation(
-                kept.localCheckpoint(eager=True),
-                tmp,
-                "doc_id",
-                sized_on=raw,
-                target_file_bytes=target_file_bytes,
-            )
-        _swap_dir_in(tmp, cur)
+            if part:
+                kept = kept.select(
+                    F.col(part).cast("int").alias(part),
+                    *[c for c in kept.columns if c != part],
+                ).localCheckpoint(eager=True)  # fully read before the swap
+                kept.repartition(part).write.mode("overwrite").partitionBy(
+                    part
+                ).parquet(tmp)
+            else:
+                write_store_relation(
+                    kept.localCheckpoint(eager=True),
+                    tmp,
+                    "doc_id",
+                    sized_on=raw,
+                    target_file_bytes=target_file_bytes,
+                )
     shutil.rmtree(os.path.join(path, _LSH_TOMBSTONE_DIR), ignore_errors=True)
     return n
 
@@ -1208,8 +1193,6 @@ def setjoin_index_build(spark, path: str, table_expr: str) -> None:
 
     from pyspark.sql import functions as F
 
-    from .store_layout import parallel_store_writes
-
     shutil.rmtree(path, ignore_errors=True)
     sh = _shingle_rel(spark, table_expr)
     order = sh.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
@@ -1242,30 +1225,28 @@ def setjoin_index_append(spark, path: str, table_expr: str, sh=None) -> None:
     shingle relation instead of re-exploding the batch per verb."""
     import os
 
-    from .store_layout import parallel_store_writes
-
     if sh is None:
         sh = _shingle_rel(spark, table_expr)
     order = spark.read.parquet(os.path.join(path, "order"))
-    writes = [
-        lambda: sh.write.mode("append").parquet(os.path.join(path, "shingles")),
-        lambda: _prefix_under_order(sh, order)
-        .write.mode("append")
-        .parquet(os.path.join(path, "prefix")),
-    ]
+    writes = [lambda: sh.write.mode("append").parquet(os.path.join(path, "shingles"))]
     # increment-sized set rows; replays write duplicate rows the read's
     # union-merge absorbs.  Only maintained when the store HAS a sets/
     # relation — appending increments into a legacy store without one
     # would leave it incomplete and silently wrong on read.
-    if os.path.isdir(os.path.join(path, "sets")):
+    if _setjoin_has_sets(path):
         writes.append(
             lambda: _setjoin_doc_sets(sh)
             .write.mode("append")
             .parquet(os.path.join(path, "sets"))
         )
-    # independent output dirs over one checkpointed source — overlap
-    # the jobs (guide §2.6) instead of paying three serial actions
+    # the verify-side writes overlap (guide §2.6); prefix/ — the only
+    # candidate-generating relation — lands only after both succeeded,
+    # so a failed append can never leave candidates whose verify rows
+    # are missing (they would be dropped silently until a replay)
     parallel_store_writes(*writes)
+    _prefix_under_order(sh, order).write.mode("append").parquet(
+        os.path.join(path, "prefix")
+    )
 
 
 def setjoin_index_compact(spark, path: str) -> None:
@@ -1274,43 +1255,37 @@ def setjoin_index_compact(spark, path: str) -> None:
     The pairs result is bit-identical before/after — the prefix rule is
     lossless under ANY single total order — while candidate counts may
     shrink (fresh df concentrates rarity better than frozen-df-0 for
-    append-era shingles).  Dot-tmp + rename swap, single-writer."""
+    append-era shingles)."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
-    from .sketches import _swap_dir_in
-
-    sh = _setjoin_retained(
-        spark, path, spark.read.parquet(os.path.join(path, "shingles"))
-    ).distinct()
-    from .store_layout import parallel_store_writes
-
-    sh = sh.localCheckpoint(eager=True)
-    order = sh.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    order = order.localCheckpoint(eager=True)
-    subs = (
-        ("shingles", sh),
-        ("order", order),
-        ("prefix", _prefix_under_order(sh, order)),
-        # re-freeze also collapses sets/ back to one row per doc (and
-        # heals a legacy store that never had the relation)
-        ("sets", _setjoin_doc_sets(sh)),
-    )
-
-    def _write_tmp(sub, df):
-        tmp = os.path.join(path, f".{sub}.compact.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-
-    # every tmp write reads only the two checkpointed relations — write
-    # them concurrently (guide §2.6), then swap sequentially (renames
-    # are instant; readers see each sub-relation absent only between
-    # its own two renames, exactly as before)
-    parallel_store_writes(*[lambda s=sub, d=df: _write_tmp(s, d) for sub, df in subs])
-    for sub, _ in subs:
-        _swap_dir_in(os.path.join(path, f".{sub}.compact.tmp"), os.path.join(path, sub))
+    subs = ("shingles", "order", "prefix", "sets")
+    with staged_swap(*[os.path.join(path, sub) for sub in subs]) as tmps:
+        sh = _setjoin_retained(
+            spark, path, spark.read.parquet(os.path.join(path, "shingles"))
+        ).distinct()
+        sh = sh.localCheckpoint(eager=True)
+        order = sh.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
+        order = order.localCheckpoint(eager=True)
+        rels = (
+            sh,
+            order,
+            _prefix_under_order(sh, order),
+            # re-freeze also collapses sets/ back to one row per doc (and
+            # heals a legacy store that never had the relation)
+            _setjoin_doc_sets(sh),
+        )
+        # every tmp write reads only the two checkpointed relations —
+        # write them concurrently (guide §2.6), then swap sequentially
+        # (renames are instant; readers see each sub-relation absent
+        # only between its own two renames)
+        parallel_store_writes(
+            *[
+                lambda d=df, t=tmp: d.write.mode("overwrite").parquet(t)
+                for df, tmp in zip(rels, tmps)
+            ]
+        )
 
 
 def _setjoin_doc_sets(sh):
@@ -1339,18 +1314,27 @@ def _setjoin_merge_sets(sets):
     )
 
 
-def _setjoin_sets_raw(spark, path: str):
-    """The persisted (doc_id, shs) set rows (retention-filtered), or
-    ``None`` for a store whose ``sets/`` relation does not exist — the
-    reads then fall back to grouping the shingle rows, so a pre-r17
-    store stays fully served (and the next compact/purge heals it by
-    rebuilding ``sets/`` from the shingle relation)."""
+def _setjoin_has_sets(path: str) -> bool:
+    """True when the store has a ``sets/`` relation holding data files —
+    the ONE predicate both the append (maintain it?) and the reads
+    (serve from it?) use, so they can never disagree on it."""
     import os
 
     d = os.path.join(path, "sets")
-    if not os.path.isdir(d) or not any(f.endswith(".parquet") for f in os.listdir(d)):
+    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+
+
+def _setjoin_sets_raw(spark, path: str):
+    """The persisted (doc_id, shs) set rows (retention-filtered), or
+    ``None`` for a store without a ``sets/`` relation — the reads then
+    fall back to grouping the shingle rows, so a pre-r17 store stays
+    fully served (and the next compact/purge heals it by rebuilding
+    ``sets/`` from the shingle relation)."""
+    import os
+
+    if not _setjoin_has_sets(path):
         return None
-    return _setjoin_retained(spark, path, spark.read.parquet(d))
+    return _setjoin_retained(spark, path, spark.read.parquet(os.path.join(path, "sets")))
 
 
 def _setjoin_verify_exact(cand, sets_a, sets_b, broadcast_sets=False):
@@ -1638,15 +1622,11 @@ def setjoin_index_expire(path: str, before_doc_id: int) -> None:
     (which re-freezes over survivors only); the marker persists so a
     late append of pre-cutoff docs stays excluded — retention is a
     policy, not a one-shot delete."""
-    from .store_layout import _write_int_marker_monotone
-
     _write_int_marker_monotone(path, _SETJOIN_RETENTION_FILE, before_doc_id)
 
 
 def _setjoin_retained(spark, path: str, df):
     """Apply the retention cutoff (if any) to a store-side relation."""
-    from .store_layout import _read_int_marker
-
     cut = _read_int_marker(path, _SETJOIN_RETENTION_FILE)
     if cut is not None:
         from pyspark.sql import functions as F
@@ -1721,42 +1701,37 @@ def setjoin_index_purge(spark, path: str) -> int:
     scrubbed-after == plain-after (pinned in tests/test_round10.py).
     The frozen order/ keeps its stale df weights — any ONE total order
     preserves losslessness, and compaction is the verb that re-freezes.
-    Dot-tmp + rename swap, single-writer.  Returns the tombstoned id
-    count purged."""
+    Returns the tombstoned id count purged."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
-    from .sketches import _swap_dir_in
-
     tomb = _setjoin_tombstones(spark, path).localCheckpoint(eager=True)
     n = tomb.count()
     for sub in ("shingles", "prefix"):
-        kept = (
-            _setjoin_retained(spark, path, spark.read.parquet(os.path.join(path, sub)))
-            .distinct()
-            .join(F.broadcast(tomb), "doc_id", "left_anti")
-            .localCheckpoint(eager=True)  # fully read before the swap
-        )
-        tmp = os.path.join(path, f".{sub}.purge.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        kept.write.mode("overwrite").parquet(tmp)
-        _swap_dir_in(tmp, os.path.join(path, sub))
+        with staged_swap(os.path.join(path, sub)) as (tmp,):
+            (
+                _setjoin_retained(
+                    spark, path, spark.read.parquet(os.path.join(path, sub))
+                )
+                .distinct()
+                .join(F.broadcast(tomb), "doc_id", "left_anti")
+                .localCheckpoint(eager=True)  # fully read before the swap
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
     # sets/ is rebuilt from the purged shingle relation (one row per
     # surviving doc — also heals a legacy store without the relation):
     # replayed set rows need not be byte-identical (collect_set array
     # order), so a row-level DISTINCT cannot collapse them like the
     # row-relations above
-    kept_sets = _setjoin_doc_sets(
-        _setjoin_retained(
-            spark, path, spark.read.parquet(os.path.join(path, "shingles"))
-        )
-    ).localCheckpoint(eager=True)
-    tmp = os.path.join(path, ".sets.purge.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    kept_sets.write.mode("overwrite").parquet(tmp)
-    _swap_dir_in(tmp, os.path.join(path, "sets"))
+    with staged_swap(os.path.join(path, "sets")) as (tmp,):
+        _setjoin_doc_sets(
+            _setjoin_retained(
+                spark, path, spark.read.parquet(os.path.join(path, "shingles"))
+            )
+        ).localCheckpoint(eager=True).write.mode("overwrite").parquet(tmp)
     shutil.rmtree(os.path.join(path, _SETJOIN_TOMBSTONE_DIR), ignore_errors=True)
     return n
 

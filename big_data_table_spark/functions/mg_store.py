@@ -7,11 +7,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .store_layout import (  # noqa: F401  (re-exported: the store families
-    _MARKER_LOCK_WAIT_SEC,  # and law tests import the marker machinery
-    _max_marker_scan,  # through this module; the ONE audited copy was
-    _read_int_marker,  # hoisted to store_layout in r13 — VERDICT r12 #5)
+from .store_layout import (
+    _CHUNK_RETENTION_FILE,
+    _check_append_chunk,
+    _check_append_day,
+    _guard_expired_days,
+    _read_compact_watermark,
     _write_int_marker_monotone,
+    compact_day,
 )
 
 
@@ -37,131 +40,6 @@ from .store_layout import (  # noqa: F401  (re-exported: the store families
 # bdt.eval scatter/gather); here the per-slice summaries are the
 # partials and the range read is the gather, with honest bounds.
 # ------------------------------------------------------------------ #
-
-COMPACT_CHUNK = -1
-"""Reserved chunk id owned by the compaction verb (r9 ADVICE): appenders
-REJECT negative chunk ids, so a compacted summary (written at
-``chunk=-1``) can never be mixed with — or, in the additive stores,
-overwritten by — a later append reusing its id.  Caller contract on the
-append verbs: chunk ids must be NON-NEGATIVE and unique per day; the
-summaries of two different slices landing under one (day, chunk) would
-merge two different ``thr`` prune lines into one summary and corrupt
-the [lower, upper] bound algebra."""
-
-
-def _check_append_chunk(
-    chunk: int, store_path: str | None = None, scope: str | None = None
-) -> None:
-    """Reject chunk ids the additive merge class cannot absorb: negative
-    ids are the compactor's (an append reusing the compact id would
-    dynamic-overwrite merged counters — a silent DELETE), and when
-    ``store_path`` carries a compaction watermark, ids at or below it
-    are rejected too (r10 ADVICE: after compaction collapses chunks into
-    the reserved id, a pre-compaction chunk id names a now-EMPTY
-    partition while the merged copy of its counts lives on — re-using
-    it would silently double-count).  ``scope`` selects a per-day
-    watermark for the day-partitioned stores (chunk ids are unique PER
-    DAY there; a global mark would wrongly block other days).  Raising
-    (not skipping) is deliberate: a silent no-op would DROP genuinely
-    new data appended under a stale id, and compaction is a documented
-    single-writer maintenance verb run with writers quiesced — so a
-    hit here is a real id-reuse bug, not a racing replay.
-
-    OPERATIONAL REQUIREMENT (r11 ADVICE): for STREAMING writers,
-    "quiesced" means the stream's checkpoint is fully COMMITTED, not
-    merely that the query is stopped — a trigger whose append landed
-    but whose checkpoint did not will replay its (now sub-watermark)
-    chunk id on restart and land here.  Either drain the stream
-    (awaitTermination after the last trigger completes) before
-    compacting, or make the replay-aware caller catch this ValueError,
-    verify the merged chunk=-1 partition already contains the chunk's
-    counts (it does, by the watermark's construction — the compactor
-    merged them), and drop the replayed batch."""
-    if int(chunk) < 0:
-        raise ValueError(
-            f"chunk id {chunk} is reserved: negative ids belong to the "
-            "compaction verb (COMPACT_CHUNK); append chunk ids must be "
-            "non-negative and unique per day"
-        )
-    if store_path is not None:
-        wm = (
-            _max_compact_watermark(store_path)
-            if scope == "*"
-            else _read_compact_watermark(store_path, scope=scope)
-        )
-        if wm is not None and int(chunk) <= wm:
-            raise ValueError(
-                f"chunk id {chunk} is at or below the compaction "
-                f"watermark {wm}: those chunks were merged into the "
-                "reserved compact partition, so re-using the id would "
-                "silently double-count; use a fresh id above the "
-                "watermark"
-            )
-        cut = (
-            _max_chunk_retention(store_path)
-            if scope == "*"
-            else max(
-                (
-                    c
-                    for c in (
-                        _read_chunk_retention(store_path),
-                        _read_chunk_retention(store_path, scope=scope)
-                        if scope is not None
-                        else None,
-                    )
-                    if c is not None
-                ),
-                default=None,
-            )
-        )
-        if cut is not None and int(chunk) < cut:
-            raise ValueError(
-                f"chunk id {chunk} is below the chunk-retention cutoff "
-                f"{cut} (chunk_expire): the batch was forgotten — a "
-                "late-arriving replay must not resurrect expired data"
-            )
-
-
-_COMPACT_WATERMARK_FILE = ".compact_watermark"
-_CHUNK_RETENTION_FILE = ".chunk_retention"
-
-
-def _read_compact_watermark(store_path: str, scope: str | None = None) -> int | None:
-    """The max chunk id a compaction has merged for this store (or for
-    one ``scope`` — a day key in the day-partitioned stores), or None
-    when never compacted."""
-    name = _COMPACT_WATERMARK_FILE if scope is None else f"{_COMPACT_WATERMARK_FILE}.{scope}"
-    return _read_int_marker(store_path, name)
-
-
-def _write_compact_watermark(
-    store_path: str, max_chunk: int, scope: str | None = None
-) -> None:
-    """Persist the compaction watermark, MONOTONE — a replayed compact
-    that saw fewer chunks must never lower the guard."""
-    name = _COMPACT_WATERMARK_FILE if scope is None else f"{_COMPACT_WATERMARK_FILE}.{scope}"
-    _write_int_marker_monotone(store_path, name, max_chunk)
-
-
-def _max_compact_watermark(store_path: str) -> int | None:
-    return _max_marker_scan(store_path, _COMPACT_WATERMARK_FILE)
-
-
-def _read_chunk_retention(store_path: str, scope: str | None = None) -> int | None:
-    """The chunk-id retention cutoff (chunks with id < cutoff were
-    forgotten), globally or for one ``scope`` day, or None when never
-    expired."""
-    name = (
-        _CHUNK_RETENTION_FILE
-        if scope is None
-        else f"{_CHUNK_RETENTION_FILE}.{scope}"
-    )
-    return _read_int_marker(store_path, name)
-
-
-def _max_chunk_retention(store_path: str) -> int | None:
-    return _max_marker_scan(store_path, _CHUNK_RETENTION_FILE)
-
 
 def chunk_expire(path: str, before_chunk: int, day: str | None = None) -> list[str]:
     """CHUNK-dimension retention WITHIN retained days (r11 VERDICT #5 —
@@ -232,22 +110,6 @@ def chunk_expire(path: str, before_chunk: int, day: str | None = None) -> list[s
                 shutil.rmtree(os.path.join(part_dir, c))
                 dropped.append(f"{d}/{c}")
     return dropped
-
-
-def _mark_compacted_chunks(store_path: str, part_dir: str, scope: str) -> None:
-    """Record the max non-negative chunk id present in ``part_dir``
-    BEFORE a compaction collapses it — the appender guard's source of
-    truth.  No-op when only the reserved compact partition exists."""
-    import os
-
-    chunks = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(part_dir)
-        if d.startswith("chunk=")
-    ]
-    merged_max = max((c for c in chunks if c >= 0), default=None)
-    if merged_max is not None:
-        _write_compact_watermark(store_path, merged_max, scope=scope)
 
 
 def mg_chunk_summary(
@@ -360,8 +222,6 @@ def mg_rollup_append_batch(
     cutoff (``rollup_expire``) is enforced executor-side
     (``store_layout._guard_expired_days`` — a replayed batch touching
     a forgotten day raises inside the write job, landing nothing)."""
-    from .store_layout import _guard_expired_days
-
     _check_append_chunk(batch_id, store_path=path, scope="*")
     rows = _guard_expired_days(
         _mg_day_summaries(batch_df, value_col, ts_col, cap, chunk=batch_id), path
@@ -389,8 +249,6 @@ def mg_rollup_append_chunk(
     cannot be DISTINCT-absorbed: its merged copy in chunk=-1 carries
     different thr/ube, so it would double-count).  Rejects a FORGOTTEN
     day (the ``rollup_expire`` day-retention marker)."""
-    from .store_layout import _check_append_day
-
     _check_append_chunk(chunk, store_path=path, scope=day)
     _check_append_day(day, path)
     rows = mg_chunk_summary(ev_chunk, day, chunk, value_col, cap)
@@ -406,47 +264,34 @@ def mg_rollup_compact(spark, path: str, day: str) -> int:
     absorbs the thresholds of sibling chunks it was absent from; the
     merged ``thr`` is the chunk thresholds' sum.  The range-read
     algebra is bit-identical before and after (the store's merge law,
-    pinned in test_round9).  Same dot-tmp + rename-aside swap as the
-    other compactors (single-writer)."""
-    import os
-    import shutil
+    pinned in test_round9)."""
 
-    part_dir = os.path.join(path, f"day={day}")
-    _mark_compacted_chunks(path, part_dir, scope=day)  # appender guard
-    rows = spark.read.parquet(part_dir).distinct()
-    thrs = rows.select("chunk", "thr").distinct().localCheckpoint(eager=True)
-    tot = thrs.agg(F.sum("thr").cast("long").alias("t"))
-    merged = (
-        rows.groupBy("v")
-        .agg(
-            F.sum("c").cast("long").alias("c"),
-            F.sum("ube").cast("long").alias("ube0"),
-            F.sum("thr").cast("long").alias("pthr"),
+    def merge(raw, dest):
+        rows = raw.distinct()
+        thrs = rows.select("chunk", "thr").distinct().localCheckpoint(eager=True)
+        tot = thrs.agg(F.sum("thr").cast("long").alias("t"))
+        (
+            rows.groupBy("v")
+            .agg(
+                F.sum("c").cast("long").alias("c"),
+                F.sum("ube").cast("long").alias("ube0"),
+                F.sum("thr").cast("long").alias("pthr"),
+            )
+            .crossJoin(F.broadcast(tot))
+            .select(
+                # chunk stays a directory partition (dest is chunk=-1,
+                # the reserved compact id), never an in-file column
+                "v",
+                "c",
+                (F.col("ube0") + F.col("t") - F.col("pthr")).cast("long").alias("ube"),
+                F.col("t").alias("thr"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(dest)
         )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            # chunk stays a directory partition (tmp/chunk=-1, the
-            # reserved compact id), never an in-file column
-            "v",
-            "c",
-            (F.col("ube0") + F.col("t") - F.col("pthr")).cast("long").alias("ube"),
-            F.col("t").alias("thr"),
-        )
-        .coalesce(1)
-    )
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, f"chunk={COMPACT_CHUNK}"))
-    from .sketches import _swap_dir_in
 
-    _swap_dir_in(tmp, part_dir)
-    return len(
-        [
-            f
-            for f in os.listdir(os.path.join(part_dir, f"chunk={COMPACT_CHUNK}"))
-            if f.endswith(".parquet")
-        ]
-    )
+    return compact_day(spark, path, day, merge, chunked=True)
 
 
 def mg_rollup_range_topk(
@@ -766,8 +611,6 @@ def mg_rollup_grouped_append_batch(
     unique per day across appenders, and above every day's
     compaction watermark.  Data-borne days: the day-retention cutoff
     is enforced executor-side (``_guard_expired_days``)."""
-    from .store_layout import _guard_expired_days
-
     _check_append_chunk(batch_id, store_path=path, scope="*")
     rows = _guard_expired_days(
         _mg_grouped_day_summaries(
@@ -907,47 +750,32 @@ def mg_rollup_grouped_compact(spark, path: str, day: str) -> int:
     previously absorbed ube), and the merged ``thr`` is the group's
     chunk-threshold sum.  The grouped range algebra is bit-identical
     before and after (the merge law, pinned) — exactly the ungrouped
-    :func:`mg_rollup_compact` per group.  Same dot-tmp + rename-aside
-    swap (single-writer)."""
-    import os
-    import shutil
+    :func:`mg_rollup_compact` per group."""
 
-    part_dir = os.path.join(path, f"day={day}")
-    _mark_compacted_chunks(path, part_dir, scope=day)  # appender guard
-    rows = spark.read.parquet(part_dir).distinct()
-    thrs = rows.select("chunk", "g", "thr").distinct().localCheckpoint(
-        eager=True
-    )
-    tot = thrs.groupBy("g").agg(F.sum("thr").cast("long").alias("t"))
-    merged = (
-        rows.groupBy("g", "v")
-        .agg(
-            F.sum("c").cast("long").alias("c"),
-            F.sum("ube").cast("long").alias("ube0"),
-            F.sum("thr").cast("long").alias("pthr"),
+    def merge(raw, dest):
+        rows = raw.distinct()
+        thrs = rows.select("chunk", "g", "thr").distinct().localCheckpoint(
+            eager=True
         )
-        .join(F.broadcast(tot), "g")
-        .select(
-            "g",
-            "v",
-            "c",
-            (F.col("ube0") + F.col("t") - F.col("pthr")).cast("long").alias("ube"),
-            F.col("t").alias("thr"),
+        tot = thrs.groupBy("g").agg(F.sum("thr").cast("long").alias("t"))
+        (
+            rows.groupBy("g", "v")
+            .agg(
+                F.sum("c").cast("long").alias("c"),
+                F.sum("ube").cast("long").alias("ube0"),
+                F.sum("thr").cast("long").alias("pthr"),
+            )
+            .join(F.broadcast(tot), "g")
+            .select(
+                "g",
+                "v",
+                "c",
+                (F.col("ube0") + F.col("t") - F.col("pthr")).cast("long").alias("ube"),
+                F.col("t").alias("thr"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(dest)
         )
-        .coalesce(1)
-    )
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(
-        os.path.join(tmp, f"chunk={COMPACT_CHUNK}")
-    )
-    from .sketches import _swap_dir_in
 
-    _swap_dir_in(tmp, part_dir)
-    return len(
-        [
-            f
-            for f in os.listdir(os.path.join(part_dir, f"chunk={COMPACT_CHUNK}"))
-            if f.endswith(".parquet")
-        ]
-    )
+    return compact_day(spark, path, day, merge, chunked=True)

@@ -663,9 +663,9 @@ def _semantic_store_rows(spark, path: str):
     survivors (pinned in tests/test_round10.py)."""
     import os
 
-    from .store_layout import _recover_store_root
+    from .store_layout import _recover_aside
 
-    _recover_store_root(path)  # crashed root swap -> auto-heal (r12 ADVICE)
+    _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
     rows = _sem_retained(
         path, spark.read.parquet(os.path.join(path, "rows"))
     ).distinct()

@@ -56,6 +56,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .portable import SPARK, bit_xor
+from .store_layout import (
+    _DAY_RETENTION_FILE,
+    _aside_target,
+    _check_append_chunk,
+    _check_append_day,
+    _data_file_count,
+    _guard_expired_days,
+    _write_str_marker_monotone,
+    compact_all_days,
+    compact_day,
+    staged_swap,
+)
 
 _MOD = 4294967296  # 2^32
 _C1 = 0x85EBCA6B
@@ -1298,8 +1310,6 @@ def hll_rollup_append_day(
     directory — prior days' files are never rewritten (pinned in
     tests/test_round6.py).  Rejects a FORGOTTEN day (r13: replays
     must not resurrect days dropped by ``rollup_expire``)."""
-    from .store_layout import _check_append_day
-
     _check_append_day(day, path)
     regs = hll_registers(
         ev_day.select(F.lit(day).alias("day"), value_col), ["day"], value_col, p
@@ -1323,51 +1333,27 @@ def hll_rollup_compact(spark, path: str, day: str) -> int:
     MAX is idempotent, compaction commutes with replayed appends —
     at-least-once delivery into the store is safe.
 
-    The rewrite stages into a dot-prefixed temp dir inside the store
-    (invisible to Spark's parquet reader) and swaps via rename-aside
-    (single-writer verb — the day dir is absent only for the instant
-    between two renames); only ``day=<day>`` is touched — all other
-    days' files keep their identity (pinned by file snapshot in tests).  On a production
-    object store this swap is the one step to re-express on a
+    Only ``day=<day>`` is rewritten — all other days' files keep their
+    identity (pinned by file snapshot in tests).  On a production object
+    store the swap (``store_layout``) is the one step to re-express on a
     transactional table format; the register-table semantics carry over
     unchanged."""
-    import os
-    import shutil
-
-    part_dir = os.path.join(path, f"day={day}")
-    merged = (
-        spark.read.parquet(part_dir)
-        .groupBy("bucket")
+    return compact_day(
+        spark,
+        path,
+        day,
+        lambda raw, dest: raw.groupBy("bucket")
         .agg(F.max("reg").alias("reg"))
         .coalesce(1)
-    )
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_dir_in(tmp, part_dir)
-    return len(
-        [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
+        .write.mode("overwrite")
+        .parquet(dest),
     )
 
 
 def hll_rollup_compact_all(spark, path: str) -> dict[str, int]:
-    """Compact every day whose directory holds more than one data file.
-    Returns ``{day: files_before}`` for the days rewritten — single-file
-    days are left untouched (their files keep identity), so repeated
-    maintenance runs converge to a no-op."""
-    import os
-
-    out: dict[str, int] = {}
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("day="):
-            continue
-        n = len(
-            [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
-        )
-        if n > 1:
-            out[d.split("=", 1)[1]] = n
-            hll_rollup_compact(spark, path, d.split("=", 1)[1])
-    return out
+    """Compact every day whose directory holds more than one data file
+    (``store_layout.compact_all_days``)."""
+    return compact_all_days(path, lambda day: hll_rollup_compact(spark, path, day))
 
 
 def hll_stream_sink_compact(spark, stream_dir: str, rollup_path: str) -> None:
@@ -1476,25 +1462,21 @@ def bloom_index_append(df: DataFrame, path: str, value_col: str) -> None:
 
 def bloom_index_compact(spark, path: str) -> int:
     """Rewrite the accumulated per-append files as ONE distinct-position
-    file (read cost back to ≤m rows regardless of append count) via the
-    same dot-prefixed temp + rename swap as ``hll_rollup_compact``.
+    file (read cost back to ≤m rows regardless of append count).
     Returns the data-file count after compaction (1).  Decisions are
     EXACTLY preserved: the filter is its position SET, and compaction is
-    set identity."""
-    import os
-    import shutil
-
-    m, k = _bloom_meta(path)
-    merged = spark.read.parquet(path).distinct().coalesce(1)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_dir_in(tmp, path)
+    set identity.  The geometry meta is written into the staged dir, so
+    the swap carries it — the store is never live without its meta."""
     import json
 
-    with open(_bloom_meta_path(path), "w") as fh:
-        json.dump({"m": m, "k": k}, fh)
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    with staged_swap(path) as (tmp,):
+        m, k = _bloom_meta(path)
+        spark.read.parquet(path).distinct().coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        with open(_bloom_meta_path(tmp), "w") as fh:
+            json.dump({"m": m, "k": k}, fh)
+    return _data_file_count(path)
 
 
 def bloom_index_probe(spark, path: str, df: DataFrame, value_col: str) -> DataFrame:
@@ -1732,29 +1714,6 @@ def exact_top_keys(
     return df.orderBy(F.col(order_col).desc(), F.col(key_col)).limit(k)
 
 
-def _swap_dir_in(tmp: str, dst: str) -> None:
-    """Swap a freshly-written ``tmp`` dir into place at ``dst``.
-
-    Single-writer store verb: the previous dir is renamed aside first,
-    so ``dst`` is absent only for the instant between two renames
-    (instead of for the whole rmtree+rename of the old pattern), then
-    the old copy is deleted.  The aside dir is DOT-PREFIXED like the
-    tmp dir: Spark's partition discovery skips dot-entries, so a crash
-    between the renames can never surface the old copy as a phantom
-    ``day=...compact.old`` partition inside a range filter (pinned in
-    test_round9).  Shared by every store compactor."""
-    import os
-    import shutil
-
-    head, tail = os.path.split(dst.rstrip("/"))
-    old = os.path.join(head, f".{tail}.compact.old")
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(dst):  # r17: a swap may CREATE the relation
-        os.rename(dst, old)  # (setjoin compact/purge healing a legacy
-    os.rename(tmp, dst)      # store's absent sets/ sub-dir)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def rollup_expire(path: str, before_day: str) -> list[str]:
     """Retention enforcement — the day-partitioned stores' fourth verb
     (build / append / compact / EXPIRE): drop every ``day=`` partition
@@ -1775,30 +1734,27 @@ def rollup_expire(path: str, before_day: str) -> list[str]:
     ``chunk_expire`` hazard class, day axis).  Crash ordering is
     marker-BEFORE-drop: a mid-verb crash leaves the guard armed,
     re-running completes the drop; replayed/lower-cutoff expires are
-    no-ops (monotone marker, dirs gone)."""
+    no-ops (monotone marker, dirs gone).  A dropped day's swap aside
+    (``.day=<d>.compact.old``, left by a crash inside a swap) is
+    deleted with it, so no writer verb can rename it back."""
     import os
     import shutil
 
-    from .store_layout import _DAY_RETENTION_FILE, _write_str_marker_monotone
-
     _write_str_marker_monotone(path, _DAY_RETENTION_FILE, before_day)
-    dropped: list[str] = []
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("day="):
-            continue
-        day = d.split("=", 1)[1]
-        if day < before_day:
+    dropped: set[str] = set()
+    for d in os.listdir(path):
+        name = _aside_target(d) or d
+        if name.startswith("day=") and name.split("=", 1)[1] < before_day:
             shutil.rmtree(os.path.join(path, d))
-            dropped.append(day)
-    return dropped
+            dropped.add(name.split("=", 1)[1])
+    return sorted(dropped)
 
 
 # --------------------------------------------------------------------- #
 # Persisted theta/KMV day store — MOVED to theta_store.py (r14
 # module-budget split, VERDICT r13 #2: this module sat at 2500/2500
 # lines).  Re-exported here so the catalog, the law tests, and every
-# historical caller keep importing through ``functions.sketches`` (the
-# mg_store marker-shim precedent).
+# historical caller keep importing through ``functions.sketches``.
 # --------------------------------------------------------------------- #
 from .theta_store import (  # noqa: E402
     _add_finalizer_hash,
@@ -1891,9 +1847,6 @@ def cms_rollup_append_chunk(
     reserved for the compaction verb, and in THIS additive class the
     contract has teeth: an append overwriting the compacted partition
     would silently delete the merged counters."""
-    from .mg_store import _check_append_chunk
-    from .store_layout import _check_append_day
-
     _check_append_chunk(chunk, store_path=path, scope=day)
     _check_append_day(day, path)
     counters = cms_counter_table(ev_chunk, value_col, w=w, d=d)
@@ -1919,58 +1872,24 @@ def cms_rollup_compact(spark, path: str, day: str) -> int:
     compact id would silently delete the merged counters) — for the
     additive class, compaction IS the merge (exact
     integer addition), so range reads before and after are bit-identical.
-    Same dot-tmp + rename-aside swap as the other stores' compactors
-    (single-writer verb: the old day is renamed aside, so the partition
-    is absent only for the instant between two renames).  Returns the
-    data-file count after compaction (1)."""
-    import os
-    import shutil
-
-    from .mg_store import _mark_compacted_chunks
-
-    part_dir = os.path.join(path, f"day={day}")
-    _mark_compacted_chunks(path, part_dir, scope=day)  # appender guard
-    merged = (
-        spark.read.parquet(part_dir)
-        .groupBy("rw", "cl")
+    Returns the data-file count after compaction (1)."""
+    return compact_day(
+        spark,
+        path,
+        day,
+        lambda raw, dest: raw.groupBy("rw", "cl")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
         .coalesce(1)
-    )
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, "chunk=-1"))
-    _swap_dir_in(tmp, part_dir)
-    return len(
-        [
-            f
-            for f in os.listdir(os.path.join(part_dir, "chunk=-1"))
-            if f.endswith(".parquet")
-        ]
+        .write.mode("overwrite")
+        .parquet(dest),
+        chunked=True,
     )
 
 
 def cms_rollup_compact_all(spark, path: str) -> dict[str, int]:
     """Compact every day holding more than one data file (multiple
-    chunks, or a multi-file chunk); single-file days keep their file
-    identity so repeated maintenance runs converge to a no-op.  Returns
-    ``{day: files_before}`` for the days rewritten."""
-    import os
-
-    out: dict[str, int] = {}
-    for dname in sorted(os.listdir(path)):
-        if not dname.startswith("day="):
-            continue
-        day_dir = os.path.join(path, dname)
-        files = [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(day_dir)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-        if len(files) > 1:
-            out[dname.split("=", 1)[1]] = len(files)
-            cms_rollup_compact(spark, path, dname.split("=", 1)[1])
-    return out
+    chunks, or a multi-file chunk — ``store_layout.compact_all_days``)."""
+    return compact_all_days(path, lambda day: cms_rollup_compact(spark, path, day))
 
 
 def cms_rollup_range_estimates(
@@ -2115,9 +2034,6 @@ def cms_rollup_append_batch(
     read-side SUM over (day, chunk) equals the one-shot sketch
     bit-for-bit no matter how the stream batched the days.  Batch ids
     must be non-negative (negative = reserved for compaction)."""
-    from .mg_store import _check_append_chunk
-    from .store_layout import _guard_expired_days
-
     _check_append_chunk(batch_id, store_path=path, scope="*")
     counters = _cms_day_counters(batch_df, value_col, ts_col, w, d)
     rows = _guard_expired_days(counters, path).withColumn("chunk", F.lit(int(batch_id)))
@@ -2131,8 +2047,8 @@ def cms_rollup_append_batch(
 
 # the SpaceSaving store lives in functions/mg_store.py (module-size
 # convention); re-exported here so the store matrix keeps one import
-# surface.  mg_store imports _swap_dir_in / exact_top_keys lazily
-# inside its verbs, so this end-of-module import is cycle-safe.
+# surface.  mg_store imports exact_top_keys lazily inside its verbs, so
+# this end-of-module import is cycle-safe.
 from .mg_store import (  # noqa: E402
     _mg_day_summaries,
     mg_chunk_summary,

@@ -1,10 +1,11 @@
 """Shared store infrastructure: size-derived output layout for doc-keyed
-store rewrites, the whole-root swap the requantize verbs share, and —
-hoisted here in r13 (VERDICT r12 #5) — the ONE audited copy of the
+store rewrites, the ONE stage-and-swap path every store rewrite takes,
+the day-store compaction body, and the ONE audited copy of the
 store-root side-marker machinery (locked monotone writers, readers,
-marker-family scans) that all eleven persisted store families use
-(8 sketch day stores + LSH / setjoin / BM25 / winnow / semantic text
-and embedding indexes + the 3 ANN stores).
+marker-family scans, the chunk-axis append guards) that all eleven
+persisted store families use (8 sketch day stores + LSH / setjoin /
+BM25 / winnow / semantic text and embedding indexes + the 3 ANN
+stores).
 
 Layout rule: the bounded-cardinality stores (HLL registers <= 2^p/day,
 MG/CMS <= sketch geometry, Bloom <= m rows) can rewrite through
@@ -21,6 +22,34 @@ single file, so every pinned file-count and plan assertion is unchanged
 at test scale).  No power-of-two rounding — plain files need no
 divisibility, only bucket counts of co-bucketed tables do.
 
+Stage-and-swap rule: every rewrite of a store directory (a day
+partition, a sub-relation, a whole single-relation store) runs inside
+:func:`staged_swap`.  It stages into the dot-prefixed sibling
+``.{name}.compact.tmp`` (:func:`_stage_dir`) and, when the rewrite
+succeeds, swaps it in with :func:`_swap_dir_in`: rename the live dir
+aside to ``.{name}.compact.old``, rename the staged dir in, delete the
+aside.  Dot-prefixed siblings are invisible to Spark's partition
+discovery.  The requantize verbs stage a whole store ROOT the same way
+(:func:`_stage_store_root` / :func:`_swap_store_root`).  Day-store
+compactors differ only in their merge: :func:`compact_day` is the
+shared body (stage, optional chunk watermark, read, merge-write, swap,
+count) and :func:`compact_all_days` the shared every-day loop.
+
+Stranded-aside recovery: a crash between a swap's two renames leaves
+the live dir ABSENT and its data in the aside.  Readers skip the
+dot-prefixed aside, so the data silently drops out of every read, and
+the next swap of the same name would delete it.  Writer verbs therefore
+rename a stranded aside back (:func:`_recover_aside`) before they touch
+the name: the staging call, :func:`compact_all_days` (every day), the
+day-append guard :func:`_check_append_day`, and the batch appenders'
+day guard :func:`_guard_expired_days`.  A day below the store's
+day-retention cutoff is never brought back, and ``rollup_expire``
+deletes the asides of the days it drops.  Day-store and index reads stay
+read-only — a reader that renamed could race a live swap; only the ANN
+store loads recover a stranded whole ROOT, as they did before.  A live
+dir WITH an aside is a crash after the second rename; the aside is
+garbage and is left to the next swap.
+
 Marker rule: markers are dot-prefixed FILES at the store ROOT
 (invisible to Spark partition discovery), written atomically via
 dot-tmp + ``os.replace``, MONOTONE (replays can never lower an
@@ -36,6 +65,11 @@ compose the same way the query paths already do.
 """
 
 from __future__ import annotations
+
+import contextlib
+import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -169,8 +203,6 @@ def _read_raw_marker(store_path: str, name: str) -> str | None:
     written.  Markers live at the store ROOT — the rename-aside swap
     replaces sub-stores wholesale, so state that must survive
     compaction cannot live inside one."""
-    import os
-
     f = os.path.join(store_path, name)
     if os.path.isfile(f):
         with open(f) as fh:
@@ -228,10 +260,6 @@ def _write_marker_monotone(store_path: str, name: str, v) -> None:
     suppresses FileNotFoundError (r12 ADVICE): if an operator removed
     the lock mid-section, the cleanup must not mask the section's real
     outcome with a second exception."""
-    import contextlib
-    import os
-    import time
-
     os.makedirs(store_path, exist_ok=True)
     lock = os.path.join(store_path, f".{name}.lock")
     deadline = time.monotonic() + _MARKER_LOCK_WAIT_SEC
@@ -282,8 +310,6 @@ def _max_marker_scan(store_path: str, base_name: str) -> int | None:
     clear every scope it might touch.  ONE copy of the
     listdir/prefix/max shape (r12 review: the watermark and retention
     scans had drifted into near-verbatim duplicates)."""
-    import os
-
     vals = []
     if os.path.isdir(store_path):
         for f in os.listdir(store_path):
@@ -312,7 +338,10 @@ def _check_append_day(day: str, store_path: str) -> None:
     feeding pre-cutoff data — both need the loud path.  The streaming
     foreachBatch writers inherit this through the shared batch
     appenders, which enforce the same cutoff executor-side
-    (:func:`_guard_expired_days`) because their days are data-borne."""
+    (:func:`_guard_expired_days`) because their days are data-borne.
+    A retained day's stranded ``day=<day>`` is then renamed back (see
+    the module's stranded-aside rule), so the append lands next to the
+    day's data instead of recreating the day without it."""
     cut = _read_day_retention(store_path)
     if cut is not None and str(day) < cut:
         raise ValueError(
@@ -320,6 +349,7 @@ def _check_append_day(day: str, store_path: str) -> None:
             "(rollup_expire): the day was forgotten — a late-arriving "
             "replay must not resurrect expired data"
         )
+    _recover_aside(os.path.join(store_path, f"day={day}"))
 
 
 def _guard_expired_days(
@@ -336,7 +366,10 @@ def _guard_expired_days(
     never-expired store (marker absent → rows returned unchanged, plan
     byte-identical — every exchange-budget and plan pin holds), and a
     single JVM-side projection when armed: no extra job, no extra
-    exchange, no driver-side day scan."""
+    exchange.  Like :func:`_check_append_day` it first renames back
+    stranded days — here every retained one, since the batch may touch
+    any day — which costs one driver-side listing of the store root."""
+    _recover_stranded_days(store_path)
     cut = _read_day_retention(store_path)
     if cut is None:
         return rows
@@ -358,6 +391,290 @@ def _guard_expired_days(
 
 
 # ------------------------------------------------------------------ #
+# Chunk-axis guards — the reserved compact chunk id, the compaction
+# watermark and the chunk-retention cutoff, shared by every chunked
+# store (CMS, bitmap, MG, grouped MG, BM25).
+# ------------------------------------------------------------------ #
+
+COMPACT_CHUNK = -1
+"""Reserved chunk id owned by the compaction verb (r9 ADVICE): appenders
+REJECT negative chunk ids, so a compacted summary (written at
+``chunk=-1``) can never be mixed with — or, in the additive stores,
+overwritten by — a later append reusing its id.  Caller contract on the
+append verbs: chunk ids must be NON-NEGATIVE and unique per day; the
+summaries of two different slices landing under one (day, chunk) would
+merge two different ``thr`` prune lines into one summary and corrupt
+the [lower, upper] bound algebra."""
+
+_COMPACT_WATERMARK_FILE = ".compact_watermark"
+_CHUNK_RETENTION_FILE = ".chunk_retention"
+
+
+def _check_append_chunk(
+    chunk: int, store_path: str | None = None, scope: str | None = None
+) -> None:
+    """Reject chunk ids the additive merge class cannot absorb: negative
+    ids are the compactor's (an append reusing the compact id would
+    dynamic-overwrite merged counters — a silent DELETE), and when
+    ``store_path`` carries a compaction watermark, ids at or below it
+    are rejected too (r10 ADVICE: after compaction collapses chunks into
+    the reserved id, a pre-compaction chunk id names a now-EMPTY
+    partition while the merged copy of its counts lives on — re-using
+    it would silently double-count).  ``scope`` selects a per-day
+    watermark for the day-partitioned stores (chunk ids are unique PER
+    DAY there; a global mark would wrongly block other days).  Raising
+    (not skipping) is deliberate: a silent no-op would DROP genuinely
+    new data appended under a stale id, and compaction is a documented
+    single-writer maintenance verb run with writers quiesced — so a
+    hit here is a real id-reuse bug, not a racing replay.
+
+    OPERATIONAL REQUIREMENT (r11 ADVICE): for STREAMING writers,
+    "quiesced" means the stream's checkpoint is fully COMMITTED, not
+    merely that the query is stopped — a trigger whose append landed
+    but whose checkpoint did not will replay its (now sub-watermark)
+    chunk id on restart and land here.  Either drain the stream
+    (awaitTermination after the last trigger completes) before
+    compacting, or make the replay-aware caller catch this ValueError,
+    verify the merged chunk=-1 partition already contains the chunk's
+    counts (it does, by the watermark's construction — the compactor
+    merged them), and drop the replayed batch."""
+    if int(chunk) < 0:
+        raise ValueError(
+            f"chunk id {chunk} is reserved: negative ids belong to the "
+            "compaction verb (COMPACT_CHUNK); append chunk ids must be "
+            "non-negative and unique per day"
+        )
+    if store_path is not None:
+        wm = (
+            _max_compact_watermark(store_path)
+            if scope == "*"
+            else _read_compact_watermark(store_path, scope=scope)
+        )
+        if wm is not None and int(chunk) <= wm:
+            raise ValueError(
+                f"chunk id {chunk} is at or below the compaction "
+                f"watermark {wm}: those chunks were merged into the "
+                "reserved compact partition, so re-using the id would "
+                "silently double-count; use a fresh id above the "
+                "watermark"
+            )
+        cut = (
+            _max_chunk_retention(store_path)
+            if scope == "*"
+            else max(
+                (
+                    c
+                    for c in (
+                        _read_chunk_retention(store_path),
+                        _read_chunk_retention(store_path, scope=scope)
+                        if scope is not None
+                        else None,
+                    )
+                    if c is not None
+                ),
+                default=None,
+            )
+        )
+        if cut is not None and int(chunk) < cut:
+            raise ValueError(
+                f"chunk id {chunk} is below the chunk-retention cutoff "
+                f"{cut} (chunk_expire): the batch was forgotten — a "
+                "late-arriving replay must not resurrect expired data"
+            )
+
+
+def _read_compact_watermark(store_path: str, scope: str | None = None) -> int | None:
+    """The max chunk id a compaction has merged for this store (or for
+    one ``scope`` — a day key in the day-partitioned stores), or None
+    when never compacted."""
+    name = _COMPACT_WATERMARK_FILE if scope is None else f"{_COMPACT_WATERMARK_FILE}.{scope}"
+    return _read_int_marker(store_path, name)
+
+
+def _write_compact_watermark(
+    store_path: str, max_chunk: int, scope: str | None = None
+) -> None:
+    """Persist the compaction watermark, MONOTONE — a replayed compact
+    that saw fewer chunks must never lower the guard."""
+    name = _COMPACT_WATERMARK_FILE if scope is None else f"{_COMPACT_WATERMARK_FILE}.{scope}"
+    _write_int_marker_monotone(store_path, name, max_chunk)
+
+
+def _max_compact_watermark(store_path: str) -> int | None:
+    return _max_marker_scan(store_path, _COMPACT_WATERMARK_FILE)
+
+
+def _read_chunk_retention(store_path: str, scope: str | None = None) -> int | None:
+    """The chunk-id retention cutoff (chunks with id < cutoff were
+    forgotten), globally or for one ``scope`` day, or None when never
+    expired."""
+    name = (
+        _CHUNK_RETENTION_FILE
+        if scope is None
+        else f"{_CHUNK_RETENTION_FILE}.{scope}"
+    )
+    return _read_int_marker(store_path, name)
+
+
+def _max_chunk_retention(store_path: str) -> int | None:
+    return _max_marker_scan(store_path, _CHUNK_RETENTION_FILE)
+
+
+def _mark_compacted_chunks(
+    store_path: str, part_dir: str, scope: str | None = None
+) -> None:
+    """Record the max non-negative chunk id present in ``part_dir``
+    BEFORE a compaction collapses it — the appender guard's source of
+    truth (``scope`` None = the store-global watermark).  No-op when
+    only the reserved compact partition exists."""
+    chunks = [
+        int(d.split("=", 1)[1])
+        for d in os.listdir(part_dir)
+        if d.startswith("chunk=")
+    ]
+    merged_max = max((c for c in chunks if c >= 0), default=None)
+    if merged_max is not None:
+        _write_compact_watermark(store_path, merged_max, scope=scope)
+
+
+# ------------------------------------------------------------------ #
+# Staged rewrites — the ONE stage-and-swap path (see module docstring)
+# ------------------------------------------------------------------ #
+
+_ASIDE_SUFFIX = ".compact.old"
+
+
+def _aside_root_for(path: str) -> str:
+    """The dot-prefixed rename-aside sibling a swap parks the old dir
+    in — ONE copy of the ``.{name}.compact.old`` convention (dot-
+    prefixed so Spark's partition discovery can never surface the old
+    copy)."""
+    head, tail = os.path.split(path.rstrip("/"))
+    return os.path.join(head, f".{tail}{_ASIDE_SUFFIX}")
+
+
+def _aside_target(name: str) -> str | None:
+    """The live dir name a ``.{name}.compact.old`` aside entry parks,
+    or None for any other directory entry."""
+    if name.startswith(".") and name.endswith(_ASIDE_SUFFIX):
+        return name[1 : -len(_ASIDE_SUFFIX)]
+    return None
+
+
+def _recover_aside(path: str) -> bool:
+    """Crash recovery for the swap window (r12 ADVICE): between a
+    swap's two renames ``path`` is ABSENT and the old copy sits in the
+    aside sibling.  Dir absent + aside present → rename the aside back.
+    Returns True when a recovery happened.  Never touches a LIVE dir
+    (both present = garbage from a crash AFTER the second rename; the
+    next swap clears the aside), and never brings back a ``day=`` dir
+    below its store's day-retention cutoff — ``rollup_expire`` promised
+    that day was gone.  Called by writer verbs and the ANN store loads
+    only — see the module's stranded-aside rule."""
+    head, tail = os.path.split(path.rstrip("/"))
+    if tail.startswith("day="):
+        cut = _read_day_retention(head)
+        if cut is not None and tail[len("day=") :] < cut:
+            return False
+    aside = _aside_root_for(path)
+    if not os.path.isdir(path) and os.path.isdir(aside):
+        os.rename(aside, path)
+        return True
+    return False
+
+
+def _recover_stranded_days(path: str) -> None:
+    """:func:`_recover_aside` for every ``day=`` partition of a store
+    whose live dir is absent but whose aside survives."""
+    if not os.path.isdir(path):
+        return
+    for f in os.listdir(path):
+        live = _aside_target(f)
+        if live is not None and live.startswith("day="):
+            _recover_aside(os.path.join(path, live))
+
+
+def _stage_dir(dst: str, suffix: str = ".compact.tmp") -> str:
+    """The sibling staging dir ``.{name}{suffix}`` for a rewrite of
+    ``dst``: recovers a stranded ``dst`` first, clears any leftover
+    staging dir, and returns the path to write into."""
+    _recover_aside(dst)
+    head, tail = os.path.split(dst.rstrip("/"))
+    tmp = os.path.join(head, f".{tail}{suffix}")
+    shutil.rmtree(tmp, ignore_errors=True)
+    return tmp
+
+
+def _swap_dir_in(tmp: str, dst: str) -> None:
+    """Swap a fully-written staging dir ``tmp`` into place at ``dst``.
+    Single-writer verb: the live dir is renamed aside first, so ``dst``
+    is absent only for the instant between two renames, then the aside
+    is deleted.  ``dst`` may be absent (a swap may CREATE a relation —
+    setjoin compact/purge healing a store without ``sets/``)."""
+    aside = _aside_root_for(dst)
+    shutil.rmtree(aside, ignore_errors=True)
+    if os.path.exists(dst):
+        os.rename(dst, aside)
+    os.rename(tmp, dst)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+@contextlib.contextmanager
+def staged_swap(*dsts: str):
+    """The ONE stage-and-swap path for store rewrites: stage every
+    destination dir (:func:`_stage_dir` — stranded ones are recovered
+    first, so reads inside the block see them), yield the staging dirs
+    in the same order, and when the block exits cleanly swap each in,
+    in order.  A block that raises swaps nothing — the live dirs are
+    untouched and the next stage clears the leftovers."""
+    tmps = [_stage_dir(d) for d in dsts]
+    yield tmps
+    for tmp, dst in zip(tmps, dsts):
+        _swap_dir_in(tmp, dst)
+
+
+def _data_file_count(d: str) -> int:
+    """Parquet data files under ``d``, counted recursively."""
+    return sum(f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs)
+
+
+def compact_day(spark, path: str, day: str, write, chunked: bool = False) -> int:
+    """The shared body of every day-store compactor: rewrite ONE
+    ``day=<day>`` partition through the family's merge and swap it in —
+    other days' files keep their identity.  ``write(raw, dest)`` merges
+    the day's raw rows (MAX by bucket, DISTINCT, t-digest re-compress,
+    SUM, BIT_OR or MG merge) and writes the result to ``dest``.
+    Chunked stores (CMS, bitmap, MG, grouped MG) record the day's
+    compaction watermark FIRST (the appender guard) and merge into the
+    reserved ``chunk=-1``.  Returns the day's data-file count after."""
+    part_dir = os.path.join(path, f"day={day}")
+    with staged_swap(part_dir) as (tmp,):
+        dest = tmp
+        if chunked:
+            _mark_compacted_chunks(path, part_dir, scope=day)
+            dest = os.path.join(tmp, f"chunk={COMPACT_CHUNK}")
+        write(spark.read.parquet(part_dir), dest)
+    return _data_file_count(part_dir)
+
+
+def compact_all_days(path: str, compact) -> dict[str, int]:
+    """Run ``compact(day)`` on every day holding more than one data file
+    (counted recursively, so multi-chunk days count); single-file days
+    keep their file identity, so repeated maintenance runs converge to
+    a no-op.  Stranded days are renamed back first.  Returns ``{day:
+    files_before}`` for the days rewritten."""
+    _recover_stranded_days(path)
+    out: dict[str, int] = {}
+    for d in sorted(os.listdir(path)):
+        if d.startswith("day="):
+            n = _data_file_count(os.path.join(path, d))
+            if n > 1:
+                out[d.split("=", 1)[1]] = n
+                compact(d.split("=", 1)[1])
+    return out
+
+
+# ------------------------------------------------------------------ #
 # Whole-root store swap (the four requantize verbs)
 # ------------------------------------------------------------------ #
 
@@ -375,56 +692,15 @@ def _is_marker_file(name: str) -> bool:
     return name.startswith(".") and not name.endswith((".tmp", ".lock"))
 
 
-def _aside_root_for(path: str) -> str:
-    """The dot-prefixed rename-aside sibling a root swap parks the old
-    store in — ONE copy of the ``.{name}.compact.old`` convention
-    (shared with ``sketches._swap_dir_in``; dot-prefixed so Spark's
-    partition discovery can never surface the old copy)."""
-    import os
-
-    head, tail = os.path.split(path.rstrip("/"))
-    return os.path.join(head, f".{tail}.compact.old")
-
-
-def _recover_store_root(path: str) -> bool:
-    """Crash recovery for the root-swap window (r12 ADVICE): between
-    the swap's two renames the store root is entirely ABSENT — the old
-    copy sits in the dot-prefixed aside sibling.  A crash there used to
-    strand the store (all reads raise, recovery manual); now any store
-    load or staging call runs this first: root absent + aside present
-    → rename the aside back and carry on.  Returns True when a
-    recovery happened.  Never touches a LIVE root (both present =
-    normal mid-swap garbage from a crash AFTER the second rename; the
-    swap's own cleanup and the next swap's rmtree handle the aside)."""
-    import os
-
-    aside = _aside_root_for(path)
-    if not os.path.isdir(path) and os.path.isdir(aside):
-        os.rename(aside, path)
-        return True
-    return False
-
-
 def _stage_store_root(path: str) -> str:
-    """The sibling dot-tmp staging root for a whole-root store swap —
-    ONE copy of the ``.{name}.requant.tmp`` naming convention the four
-    requantize verbs share (and tests pin).  Recovers a crashed prior
-    swap first (root absent, old copy in the aside sibling — r12
-    ADVICE), clears any leftover staging dir, and returns the path to
-    stage into."""
-    import os
-    import shutil
-
-    _recover_store_root(path)
-    head, tail = os.path.split(path.rstrip("/"))
-    tmp_root = os.path.join(head, f".{tail}.requant.tmp")
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    return tmp_root
+    """The staging root ``.{name}.requant.tmp`` for a whole-root swap
+    (the naming the four requantize verbs share and tests pin)."""
+    return _stage_dir(path, ".requant.tmp")
 
 
 def _swap_store_root(tmp_root: str, path: str) -> None:
     """Swap a fully-staged STORE ROOT into place — the multi-sub-store
-    variant of ``sketches._swap_dir_in`` (r12 hardening).  Per-sub-store
+    variant of :func:`_swap_dir_in` (r12 hardening).  Per-sub-store
     swaps leave a window between renames where a racing reader pairs
     sub-stores from DIFFERENT versions; for geometry-coupled stores
     (a codebook scoring codes it did not encode, centroids pruning an
@@ -450,11 +726,8 @@ def _swap_store_root(tmp_root: str, path: str) -> None:
     rewrite.  Crash windows: before the first rename — old store
     intact, staged root garbage (next stage clears it); between the
     renames — root absent, auto-recovered by
-    :func:`_recover_store_root` on the next load/stage; after the
+    :func:`_recover_aside` on the next load/stage; after the
     second rename — store live, the aside cleanup re-runs."""
-    import os
-    import shutil
-
     for f in os.listdir(path):
         p = os.path.join(path, f)
         if os.path.isfile(p) and _is_marker_file(f):

@@ -16,6 +16,16 @@ whole-stage codegen (regexp on the JVM, no Python).
 from __future__ import annotations
 
 from .portable import DUCK, SPARK, arr_el, lateral_arr, lateral_seq, regexp_count, split_ws, arr_len
+from .store_layout import (
+    _check_append_chunk,
+    _data_file_count,
+    _mark_compacted_chunks,
+    _read_int_marker,
+    _write_int_marker_monotone,
+    parallel_store_writes,
+    staged_swap,
+    write_store_relation,
+)
 from . import dedup as _dedup
 
 # marker stopwords per language for the n-gram/stopword heuristic
@@ -312,8 +322,6 @@ def bm25_index_append(spark, path: str, table_expr: str, chunk: int) -> None:
 
     from pyspark.sql import functions as F
 
-    from .mg_store import _check_append_chunk
-
     _check_append_chunk(chunk, store_path=path)
     tok = spark.sql(bm25_tok_sql(SPARK, src=table_expr)).localCheckpoint(
         eager=True
@@ -331,8 +339,6 @@ def bm25_index_append(spark, path: str, table_expr: str, chunk: int) -> None:
             .partitionBy("chunk")
             .parquet(os.path.join(path, sub))
         )
-
-    from .store_layout import parallel_store_writes
 
     # two independent sub-stores over one checkpointed token stream —
     # overlap the writes (guide §2.6)
@@ -363,11 +369,10 @@ def bm25_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> 
     silently delete the merged counts).  For the additive class
     compaction IS the merge (exact integer addition), so the top-k
     before and after is bit-identical (pinned in tests/test_round10).
-    Dot-tmp + rename-aside swap per sub-store (single-writer verb).
     Persists the COMPACTION WATERMARK (max chunk id merged, monotone)
     at the store root so appends can never re-use a merged id and
     double-count (r10 ADVICE; guard shared via
-    ``mg_store._check_append_chunk``).  The merged postings relation is
+    ``store_layout._check_append_chunk``).  The merged postings relation is
     doc x term cardinality — the LARGEST persisted relation in the repo
     — so both sub-stores rewrite with a size-derived file count
     (``store_layout``, sized on the RAW pre-merge read so a shrinking
@@ -381,39 +386,28 @@ def bm25_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> 
 
     from pyspark.sql import functions as F
 
-    from .mg_store import _write_compact_watermark
-    from .sketches import _swap_dir_in
-    from .store_layout import write_store_relation
-
-    chunks = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(os.path.join(path, "postings"))
-        if d.startswith("chunk=")
-    ]
-    merged_max = max((c for c in chunks if c >= 0), default=None)
-    if merged_max is not None:
-        _write_compact_watermark(path, merged_max)
     for sub, keys, lay, val in (
         ("postings", ["doc_id", "tk"], ["tk", "doc_id"], "tf"),
         ("dl", ["doc_id"], ["doc_id"], "dl"),
     ):
-        raw = spark.read.parquet(os.path.join(path, sub))
-        merged = (
-            _bm25_retained(path, raw, spark=spark)
-            .groupBy(*keys)
-            .agg(F.sum(val).cast("long").alias(val))
-            .localCheckpoint(eager=True)  # fully read before the swap
-        )
-        tmp = os.path.join(path, f".{sub}.compact.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        write_store_relation(
-            merged,
-            os.path.join(tmp, "chunk=-1"),
-            *lay,  # tk-first layout: the probe prunes on tk
-            sized_on=raw,
-            target_file_bytes=target_file_bytes,
-        )
-        _swap_dir_in(tmp, os.path.join(path, sub))
+        cur = os.path.join(path, sub)
+        with staged_swap(cur) as (tmp,):
+            if sub == "postings":  # the appender guard, before any swap
+                _mark_compacted_chunks(path, cur)
+            raw = spark.read.parquet(cur)
+            merged = (
+                _bm25_retained(path, raw, spark=spark)
+                .groupBy(*keys)
+                .agg(F.sum(val).cast("long").alias(val))
+                .localCheckpoint(eager=True)  # fully read before the swap
+            )
+            write_store_relation(
+                merged,
+                os.path.join(tmp, "chunk=-1"),
+                *lay,  # tk-first layout: the probe prunes on tk
+                sized_on=raw,
+                target_file_bytes=target_file_bytes,
+            )
     # the merged copies excluded tombstoned docs (scrubbed read), so
     # compaction doubles as the physical purge — drop the side table
     shutil.rmtree(os.path.join(path, _BM25_TOMBSTONE_DIR), ignore_errors=True)
@@ -470,8 +464,6 @@ def bm25_index_expire(path: str, before_doc_id: int) -> None:
     tests/test_round11.py).  Physical reclaim rides the next COMPACT;
     the marker persists so a late append of pre-cutoff docs stays
     excluded — retention is a policy, not a one-shot delete."""
-    from .store_layout import _write_int_marker_monotone
-
     _write_int_marker_monotone(path, _BM25_RETENTION_FILE, before_doc_id)
 
 
@@ -481,8 +473,6 @@ def _bm25_retained(path: str, df, spark=None):
     drop BEFORE the additive merge, so every derived statistic
     re-derives over the survivors."""
     from pyspark.sql import functions as F
-
-    from .store_layout import _read_int_marker
 
     cut = _read_int_marker(path, _BM25_RETENTION_FILE)
     if cut is not None:
@@ -969,26 +959,16 @@ def winnow_index_probe(spark, path: str, table: str):
 
 def winnow_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> int:
     """Rewrite the accumulated per-append files as distinct (doc_id,
-    fp) rows — same dot-tmp + rename swap as the other stores; replayed
-    appends (duplicate fact rows) are absorbed here exactly as the
-    probe's DISTINCT read absorbs them, so compaction never changes a
-    probe decision.  The fingerprint relation is corpus cardinality, so
-    the rewrite uses a size-derived file count hash-partitioned on
-    doc_id (``store_layout``; 1 file at fixture scale, never one task
-    for a TB store).  Returns the data-file count after."""
-    import os
-    import shutil
-
-    from .store_layout import write_store_relation
-
-    raw = spark.read.parquet(path)
-    merged = raw.distinct()
-    tmp = path.rstrip("/") + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_store_relation(
-        merged, tmp, "doc_id", sized_on=raw, target_file_bytes=target_file_bytes
-    )
-    from .sketches import _swap_dir_in
-
-    _swap_dir_in(tmp, path)
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    fp) rows; replayed appends (duplicate fact rows) are absorbed here
+    exactly as the probe's DISTINCT read absorbs them, so compaction
+    never changes a probe decision.  The fingerprint relation is corpus
+    cardinality, so the rewrite uses a size-derived file count
+    hash-partitioned on doc_id (``store_layout``; 1 file at fixture
+    scale, never one task for a TB store).  Returns the data-file count
+    after."""
+    with staged_swap(path) as (tmp,):
+        raw = spark.read.parquet(path)
+        write_store_relation(
+            raw.distinct(), tmp, "doc_id", sized_on=raw, target_file_bytes=target_file_bytes
+        )
+    return _data_file_count(path)

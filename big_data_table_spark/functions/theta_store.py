@@ -24,7 +24,8 @@ Import discipline: the murmur3-finalizer kernels and shared helpers
 stay in sketches.py; this module imports them INSIDE functions, never
 at module top, so the sketches -> theta_store re-export and a direct
 ``import theta_store`` both resolve regardless of which module loads
-first (no circular-import window).
+first (no circular-import window).  ``store_layout`` imports nothing
+from the package, so its helpers import at module top.
 
 Reference parity note: the reference (jangorecki/big.data.table,
 R/big.data.table.R) has no persisted sketch stores — declared
@@ -37,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .portable import SPARK
+from .store_layout import _check_append_day, compact_all_days, compact_day
 
 
 def _theta_day_sample(df: DataFrame, value_col: str, k: int) -> DataFrame:
@@ -95,7 +97,6 @@ def theta_rollup_append_day(
     it, and the 'partitioned' window silently becomes a single-task
     global sort of the whole day.  Rejects a FORGOTTEN day."""
     from .sketches import _hashed_values
-    from .store_layout import _check_append_day
 
     _check_append_day(day, path)
     hv = _hashed_values(ev_day.select(value_col), value_col)
@@ -110,40 +111,18 @@ def theta_rollup_append_day(
 def theta_rollup_compact(spark, path: str, day: str) -> int:
     """Compaction verb: rewrite ONE day to a single de-duplicated file
     (DISTINCT == the read-side replay absorption, made physical).
-    Same dot-tmp + rename-aside swap as ``hll_rollup_compact``
-    (single-writer verb; the day dir is absent only between the two
-    renames).  Returns the data-file count after compaction (1)."""
-    import os
-    import shutil
-
-    from .sketches import _swap_dir_in
-
-    part_dir = os.path.join(path, f"day={day}")
-    merged = spark.read.parquet(part_dir).distinct().coalesce(1)
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_dir_in(tmp, part_dir)
-    return len([f for f in os.listdir(part_dir) if f.endswith(".parquet")])
+    Returns the data-file count after compaction (1)."""
+    return compact_day(
+        spark,
+        path,
+        day,
+        lambda raw, dest: raw.distinct().coalesce(1).write.mode("overwrite").parquet(dest),
+    )
 
 
 def theta_rollup_compact_all(spark, path: str) -> dict[str, int]:
-    """Compact every multi-file day; single-file days keep their file
-    identity, so repeated maintenance runs converge to a no-op.
-    Returns ``{day: files_before}`` for the days rewritten."""
-    import os
-
-    out: dict[str, int] = {}
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("day="):
-            continue
-        n = len(
-            [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
-        )
-        if n > 1:
-            out[d.split("=", 1)[1]] = n
-            theta_rollup_compact(spark, path, d.split("=", 1)[1])
-    return out
+    """Compact every multi-file day (``store_layout.compact_all_days``)."""
+    return compact_all_days(path, lambda day: theta_rollup_compact(spark, path, day))
 
 
 def theta_rollup_range_estimate(

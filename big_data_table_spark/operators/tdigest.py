@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.store_layout import _check_append_day, compact_all_days, compact_day
+
 __all__ = [
     "tdigest_quantiles",
     "tdigest_day_digests",
@@ -316,8 +318,6 @@ def tdigest_rollup_append_day(
     Rejects a FORGOTTEN day (r13: the ``rollup_expire`` day-retention
     marker — in THIS additive-weight family a resurrected day does not
     merely reappear, it can double-count against any surviving copy)."""
-    from ..functions.store_layout import _check_append_day
-
     _check_append_day(day, path)
     narrow = df_day.select(
         F.lit(day).alias("day"), F.col(value_col).cast("double").alias("__v")
@@ -336,8 +336,8 @@ def tdigest_rollup_compact(
 
     Per-append digest rows accumulate exactly like the HLL store's
     register files — read cost grows with APPEND COUNT, not data — so
-    the same dot-prefixed-temp-dir + rename swap rewrites only
-    ``day=<day>``; other days' files keep their identity.  What is and
+    compaction rewrites only ``day=<day>``; other days' files keep their
+    identity.  What is and
     is not preserved, precisely: the merged day's TOTAL WEIGHT equals
     the sum of the input rows' weights exactly (integer-valued doubles,
     exact below 2^53 — pinned in tests/test_round7.py), while quantile
@@ -345,10 +345,6 @@ def tdigest_rollup_compact(
     merge is order-dependent (inherent; same reason
     ``tdigest_rollup_range``'s driver-hashed claim is the band, not the
     value)."""
-    import os
-    import shutil
-
-    part_dir = os.path.join(path, f"day={day}")
 
     def merge_one(pdf: pd.DataFrame) -> pd.DataFrame:
         means = np.concatenate([np.asarray(a) for a in pdf["means"]])
@@ -356,42 +352,23 @@ def tdigest_rollup_compact(
         cm, cw = _compress(means, weights, delta)
         return pd.DataFrame([(list(cm), list(cw))], columns=["means", "weights"])
 
-    merged = (
-        spark.read.parquet(part_dir)
-        .withColumn("__g", F.lit(1))
+    return compact_day(
+        spark,
+        path,
+        day,
+        lambda raw, dest: raw.withColumn("__g", F.lit(1))
         .groupBy("__g")
-        .applyInPandas(
-            merge_one, schema="means array<double>, weights array<double>"
-        )
+        .applyInPandas(merge_one, schema="means array<double>, weights array<double>")
         .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(dest),
     )
-    tmp = os.path.join(path, f".day={day}.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    from ..functions.sketches import _swap_dir_in
-
-    _swap_dir_in(tmp, part_dir)
-    return len([f for f in os.listdir(part_dir) if f.endswith(".parquet")])
 
 
 def tdigest_rollup_compact_all(spark, path: str) -> dict[str, int]:
-    """Compact every day holding more than one data file; single-file
-    days are untouched (file identity preserved), so repeated
-    maintenance runs converge to a no-op.  Returns ``{day:
-    files_before}`` for the days rewritten."""
-    import os
-
-    out: dict[str, int] = {}
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("day="):
-            continue
-        n = len(
-            [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
-        )
-        if n > 1:
-            out[d.split("=", 1)[1]] = n
-            tdigest_rollup_compact(spark, path, d.split("=", 1)[1])
-    return out
+    """Compact every day holding more than one data file
+    (``store_layout.compact_all_days``)."""
+    return compact_all_days(path, lambda day: tdigest_rollup_compact(spark, path, day))
 
 
 def tdigest_rollup_range(

@@ -189,7 +189,7 @@ def test_bm25_compaction_watermark_guard(spark, sf_dir, tmp_path):
     after = TX.bm25_index_topk(spark, path)
     assert after.count() > 0
     # a replayed compact must never LOWER the guard (monotone law)
-    from big_data_table_spark.functions.mg_store import (
+    from big_data_table_spark.functions.store_layout import (
         _read_compact_watermark,
         _write_compact_watermark,
     )

@@ -332,6 +332,7 @@ def test_chunk_expire_laws(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from big_data_table_spark.functions import mg_store as MG
+    from big_data_table_spark.functions import store_layout as SL
     from big_data_table_spark.sources.readers import load_events
 
     lo, hi = "2024-01-08", "2024-01-21"
@@ -348,7 +349,7 @@ def test_chunk_expire_laws(spark, sf_dir, tmp_path):
     # (2) replay + lower cutoff: no-ops
     assert MG.chunk_expire(path, before_chunk=1) == []
     assert MG.chunk_expire(path, before_chunk=0) == []
-    assert MG._read_chunk_retention(path) == 1
+    assert SL._read_chunk_retention(path) == 1
 
     def rows(p):
         return sorted(
@@ -378,8 +379,8 @@ def test_chunk_expire_laws(spark, sf_dir, tmp_path):
             ev.filter(F.col("user_id").cast("long") % 3 == b), day_path, batch_id=b
         )
     MG.chunk_expire(day_path, before_chunk=1, day=lo)
-    assert MG._read_chunk_retention(day_path, scope=lo) == 1
-    assert MG._read_chunk_retention(day_path) is None
+    assert SL._read_chunk_retention(day_path, scope=lo) == 1
+    assert SL._read_chunk_retention(day_path) is None
     with pytest.raises(ValueError, match="retention cutoff"):
         MG.mg_rollup_grouped_append_batch(
             ev.filter(F.col("user_id").cast("long") % 3 == 0),
@@ -519,7 +520,7 @@ def test_marker_monotone_under_concurrent_writers(tmp_path):
 
     import pytest
 
-    from big_data_table_spark.functions import mg_store as MG
+    from big_data_table_spark.functions import store_layout as SL
 
     store = str(tmp_path / "mstore")
     vals = list(range(64))
@@ -529,7 +530,7 @@ def test_marker_monotone_under_concurrent_writers(tmp_path):
 
     def reader():
         while not stop.is_set():
-            v = MG._read_int_marker(store, "m")
+            v = SL._read_int_marker(store, "m")
             if v is not None:
                 seen.append(v)
 
@@ -538,7 +539,7 @@ def test_marker_monotone_under_concurrent_writers(tmp_path):
     try:
         threads = [
             threading.Thread(
-                target=MG._write_int_marker_monotone, args=(store, "m", v)
+                target=SL._write_int_marker_monotone, args=(store, "m", v)
             )
             for v in vals
         ]
@@ -549,7 +550,7 @@ def test_marker_monotone_under_concurrent_writers(tmp_path):
     finally:
         stop.set()
         rt.join()
-    assert MG._read_int_marker(store, "m") == 63
+    assert SL._read_int_marker(store, "m") == 63
     assert seen == sorted(seen), "reader observed a monotonicity regression"
     assert not os.path.exists(os.path.join(store, ".m.lock"))
 
@@ -557,15 +558,15 @@ def test_marker_monotone_under_concurrent_writers(tmp_path):
     # next writer raises naming the lock rather than stealing it
     lock = os.path.join(store, ".m.lock")
     open(lock, "w").close()
-    old = MG._MARKER_LOCK_WAIT_SEC
-    MG._MARKER_LOCK_WAIT_SEC = 0.2
+    old = SL._MARKER_LOCK_WAIT_SEC
+    SL._MARKER_LOCK_WAIT_SEC = 0.2
     try:
         with pytest.raises(RuntimeError, match=re.escape(lock)):
-            MG._write_int_marker_monotone(store, "m", 99)
+            SL._write_int_marker_monotone(store, "m", 99)
     finally:
-        MG._MARKER_LOCK_WAIT_SEC = old
+        SL._MARKER_LOCK_WAIT_SEC = old
         os.unlink(lock)
-    assert MG._read_int_marker(store, "m") == 63
+    assert SL._read_int_marker(store, "m") == 63
 
 
 def test_store_root_swap_carries_markers(spark, sf_dir, tmp_path):
@@ -575,7 +576,7 @@ def test_store_root_swap_carries_markers(spark, sf_dir, tmp_path):
     were folded into the rewrite), and cleans up its staged sibling
     root."""
     from big_data_table_spark.catalog_base import register_views
-    from big_data_table_spark.functions import mg_store as MG
+    from big_data_table_spark.functions import store_layout as SL
     from big_data_table_spark.functions import similarity as S
 
     register_views(spark, sf_dir)
@@ -586,10 +587,10 @@ def test_store_root_swap_carries_markers(spark, sf_dir, tmp_path):
     doomed = spark.sql("SELECT vec_id FROM embeddings WHERE vec_id % 10 = 4")
     S.semantic_index_delete(doomed, sp)
     S.semantic_index_expire(sp, 7)
-    assert MG._read_int_marker(sp, S._SEM_RETENTION_FILE) == 7
+    assert SL._read_int_marker(sp, S._SEM_RETENTION_FILE) == 7
     S.semantic_index_requantize(spark, sp, n_centroids=8)
     # marker survived the whole-root swap; tombstones did not
-    assert MG._read_int_marker(sp, S._SEM_RETENTION_FILE) == 7
+    assert SL._read_int_marker(sp, S._SEM_RETENTION_FILE) == 7
     assert not os.path.isdir(os.path.join(sp, S._SEM_TOMBSTONE_DIR))
     # the staged sibling root is gone (swap consumed it)
     head, tail = os.path.split(sp)
@@ -598,7 +599,7 @@ def test_store_root_swap_carries_markers(spark, sf_dir, tmp_path):
     # and the cutoff still has teeth after the swap: a later expire
     # below the carried marker stays a no-op (monotone)
     S.semantic_index_expire(sp, 3)
-    assert MG._read_int_marker(sp, S._SEM_RETENTION_FILE) == 7
+    assert SL._read_int_marker(sp, S._SEM_RETENTION_FILE) == 7
 
 
 def test_ivf_expire_laws(spark, sf_dir, tmp_path):
@@ -611,7 +612,7 @@ def test_ivf_expire_laws(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from big_data_table_spark.functions import clustering as C
-    from big_data_table_spark.functions import mg_store as MG
+    from big_data_table_spark.functions import store_layout as SL
     from big_data_table_spark.sources.readers import Tables
 
     e = Tables(spark, sf_dir).embeddings
@@ -641,7 +642,7 @@ def test_ivf_expire_laws(spark, sf_dir, tmp_path):
     C.ivf_expire(path, cut)
     C.ivf_expire(path, cut // 2)
     assert rows() == expired
-    assert MG._read_int_marker(path, C._IVF_RETENTION_FILE) == cut
+    assert SL._read_int_marker(path, C._IVF_RETENTION_FILE) == cut
     # (3) composes with tombstones
     doomed = vecs.filter(f"vec_id >= {cut} AND vec_id % 7 = 5").select("vec_id")
     C.ivf_delete(doomed, path)
@@ -652,7 +653,7 @@ def test_ivf_expire_laws(spark, sf_dir, tmp_path):
     C.ivf_requantize(spark, path, k=8, n_iter=2)
     inv = spark.read.parquet(os.path.join(path, "inverted"))
     assert inv.where(f"vec_id < {cut}").count() == 0
-    assert MG._read_int_marker(path, C._IVF_RETENTION_FILE) == cut
+    assert SL._read_int_marker(path, C._IVF_RETENTION_FILE) == cut
     # requantize == rebuild over the retained survivors
     ref_path = str(tmp_path / "ivfexp_ref")
     C.ivf_build(
@@ -679,6 +680,7 @@ def test_chunk_expire_marker_before_removal(spark, sf_dir, tmp_path, monkeypatch
     from pyspark.sql import functions as F
 
     from big_data_table_spark.functions import mg_store as MG
+    from big_data_table_spark.functions import store_layout as SL
     from big_data_table_spark.sources.readers import load_events
 
     ev = load_events(spark, sf_dir).filter(
@@ -704,7 +706,7 @@ def test_chunk_expire_marker_before_removal(spark, sf_dir, tmp_path, monkeypatch
     finally:
         monkeypatch.setattr(_shutil, "rmtree", real_rmtree)
     # the marker landed BEFORE the (crashed) removal...
-    assert MG._read_chunk_retention(path) == 1
+    assert SL._read_chunk_retention(path) == 1
     # ...so the replay of the forgotten batch already raises
     with pytest.raises(ValueError, match="retention cutoff"):
         MG.mg_rollup_grouped_append_batch(

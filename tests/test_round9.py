@@ -8,15 +8,16 @@
    SinglePartition`` feeding a one-task Window sort over every distinct
    key.  Pinned both as a plan shape AND as bit-identity against the
    unpartitioned ``row_number`` spine it replaced (same tie-break).
-2. The rename-aside compactor swap (``sketches._swap_dir_in``): the
-   day-partition is absent only between two renames and the aside dir
-   never survives the verb.
+2. The rename-aside store swap (``store_layout.staged_swap``): the
+   rewritten dir is absent only between two renames, and no staging
+   or aside dir survives any compact or purge verb.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -72,22 +73,146 @@ def test_exact_top_keys_matches_row_number_spine(spark, sf_dir):
     assert fixed == legacy
 
 
-def test_compactor_swap_leaves_no_aside_dir(spark, sf_dir, tmp_path):
-    """The rename-aside swap cleans up after itself: after a compact the
-    day dir holds exactly one data file and no ``.compact.old`` /
-    ``.compact.tmp`` sibling remains in the store root."""
-    ev = load_events(spark, sf_dir)
-    path = str(tmp_path / "hll_store")
-    SK.hll_rollup_build(ev, path)
-    days = sorted(
-        d.split("=", 1)[1]
-        for d in os.listdir(path)
-        if d.startswith("day=")
-    )
+def _first_day(ev):
     day = F.date_format(F.to_date("ts"), "yyyy-MM-dd")
-    SK.hll_rollup_append_day(ev.filter(day == days[0]), path, days[0])
-    assert SK.hll_rollup_compact(spark, path, days[0]) == 1
-    leftovers = [d for d in os.listdir(path) if ".compact." in d]
+    d0 = ev.select(day.alias("d")).agg(F.min("d")).first()[0]
+    return d0, ev.filter(day == d0)
+
+
+def _day_store_case(build, append, compact):
+    """A day-store rewrite case: build over the events, append one more
+    slice of the first day, compact that day to one data file."""
+
+    def run(spark, sf_dir, path):
+        ev = load_events(spark, sf_dir)
+        d0, ev0 = _first_day(ev)
+        build(ev, path)
+        append(ev0, path, d0)
+        assert compact(spark, path, d0) == 1
+
+    return run
+
+
+def _doc_store_case(build, append, verb):
+    """A text-index rewrite case over a small documents slice."""
+
+    def run(spark, sf_dir, path):
+        from big_data_table_spark.catalog_base import register_views
+
+        register_views(spark, sf_dir)
+        spark.sql(
+            "CREATE OR REPLACE TEMP VIEW _r9_docs AS "
+            "SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0"
+        )
+        build(spark, path, "_r9_docs")
+        if append is not None:
+            append(spark, path, "_r9_docs")
+        verb(spark, path)
+
+    return run
+
+
+def _docs_deleted(delete):
+    def append(spark, path, view):
+        delete(spark.sql(f"SELECT doc_id FROM {view} WHERE doc_id % 3 = 0"), path)
+
+    return append
+
+
+def _bloom_case(spark, sf_dir, path):
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    SK.bloom_index_build(docs.filter(F.col("doc_id") % 3 == 0), path, "doc_id")
+    SK.bloom_index_append(docs.filter(F.col("doc_id") % 3 == 1), path, "doc_id")
+    SK.bloom_index_compact(spark, path)
+
+
+def _bitmap_purge_case(spark, sf_dir, path):
+    from big_data_table_spark.functions import bitmap_store as B
+
+    ev = load_events(spark, sf_dir)
+    B.bitmap_rollup_build(ev, path)
+    B.bitmap_rollup_delete(ev.filter(F.col("user_id") % 7 == 3).select("user_id"), path)
+    B.bitmap_rollup_purge(spark, path)
+
+
+def _rewrite_cases():
+    from big_data_table_spark.functions import dedup as DD
+    from big_data_table_spark.functions import text as TX
+    from big_data_table_spark.operators import tdigest as TD
+
+    def chunk1(append):
+        return lambda ev0, path, d0: append(ev0, path, d0, 1)
+
+    return {
+        "hll": _day_store_case(
+            SK.hll_rollup_build, SK.hll_rollup_append_day, SK.hll_rollup_compact
+        ),
+        "cms": _day_store_case(
+            SK.cms_rollup_build, chunk1(SK.cms_rollup_append_chunk), SK.cms_rollup_compact
+        ),
+        "theta": _day_store_case(
+            SK.theta_rollup_build, SK.theta_rollup_append_day, SK.theta_rollup_compact
+        ),
+        "tdigest": _day_store_case(
+            TD.tdigest_rollup_build,
+            lambda ev0, path, d0: TD.tdigest_rollup_append_day(ev0, path, d0),
+            TD.tdigest_rollup_compact,
+        ),
+        "bitmap": _day_store_case(
+            SK.bitmap_rollup_build,
+            lambda ev0, path, d0: SK.bitmap_rollup_append_chunk(ev0, path, 1),
+            SK.bitmap_rollup_compact,
+        ),
+        "mg": _day_store_case(
+            SK.mg_rollup_build, chunk1(SK.mg_rollup_append_chunk), SK.mg_rollup_compact
+        ),
+        "bloom": _bloom_case,
+        "winnow": _doc_store_case(
+            TX.winnow_index_build, TX.winnow_index_append, TX.winnow_index_compact
+        ),
+        "bm25": _doc_store_case(
+            TX.bm25_index_build,
+            lambda spark, path, view: TX.bm25_index_append(spark, path, view, chunk=1),
+            TX.bm25_index_compact,
+        ),
+        "lsh": _doc_store_case(
+            DD.lsh_index_build, DD.lsh_index_append, DD.lsh_index_compact
+        ),
+        "setjoin": _doc_store_case(
+            DD.setjoin_index_build, DD.setjoin_index_append, DD.setjoin_index_compact
+        ),
+        "bitmap_purge": _bitmap_purge_case,
+        "lsh_purge": _doc_store_case(
+            DD.lsh_index_build, _docs_deleted(DD.lsh_index_delete), DD.lsh_index_purge
+        ),
+        "setjoin_purge": _doc_store_case(
+            DD.setjoin_index_build,
+            _docs_deleted(DD.setjoin_index_delete),
+            DD.setjoin_index_purge,
+        ),
+    }
+
+
+_REWRITE_VERBS = [
+    "hll", "cms", "theta", "tdigest", "bitmap", "mg", "bloom", "winnow",
+    "bm25", "lsh", "setjoin", "bitmap_purge", "lsh_purge", "setjoin_purge",
+]
+
+
+@pytest.mark.parametrize("verb", _REWRITE_VERBS)
+def test_compactor_swap_leaves_no_aside_dir(spark, sf_dir, tmp_path, verb):
+    """Every store rewrite verb cleans up after itself: once it returns,
+    no ``.compact.`` / ``.purge.`` staging or aside sibling remains —
+    neither inside the store root (day partitions, sub-relations) nor
+    next to it (whole-store rewrites)."""
+    path = str(tmp_path / "store")
+    _rewrite_cases()[verb](spark, sf_dir, path)
+    leftovers = [
+        os.path.join(d, f)
+        for d in (path, str(tmp_path))
+        for f in os.listdir(d)
+        if ".compact." in f or ".purge." in f
+    ]
     assert leftovers == [], leftovers
 
 
