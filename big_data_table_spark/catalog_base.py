@@ -28,9 +28,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     named datasets resident per node, reference big.data.table.R:281-291).
     ``events.ts`` is registered post-conversion (nanos → timestamp).
 
-    Registration is cached per (session, sf_dir): repeated catalog calls
-    in one session skip the 10-table file-listing/schema pass; switching
-    ``sf_dir`` mid-session re-registers everything."""
+    Each table's schema comes from its parquet footer, read on the
+    driver (``sources.readers.read_parquet``), so registering starts no
+    Spark job.  Registration is cached per (session, sf_dir): repeated
+    catalog calls in one session skip the 10 views' file listing and
+    analysis; switching ``sf_dir`` mid-session re-registers everything."""
     app_id = spark.sparkContext.applicationId
     if _registered_sf.get(app_id) == sf_dir:
         return

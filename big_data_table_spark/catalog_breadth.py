@@ -16,7 +16,7 @@ from .functions.portable import DUCK, SPARK
 from .operators import joins as J
 from .operators import windows as W
 from .operators.aggregate import davg, dsum, partials
-from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table
+from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table, read_parquet
 from .catalog_base import register_views
 
 
@@ -733,7 +733,7 @@ def partitioned_etl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.withColumn("etype", F.col("event_type")).write.mode("overwrite").partitionBy(
         "etype"
     ).parquet(path)
-    back = spark.read.parquet(path).filter(F.col("etype") == "purchase")
+    back = read_parquet(spark, path).filter(F.col("etype") == "purchase")
     return (
         back.withColumn("hour", (F.unix_timestamp("ts") / 3600).cast("bigint") * 3600)
         .groupBy("hour")

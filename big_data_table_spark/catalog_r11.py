@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog_base import register_views
 from .functions.portable import DUCK
+from .sources.readers import read_parquet
 
 
 # ------------------------------------------------------------------ #
@@ -160,7 +161,7 @@ def semantic_requantize_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"WITH {_vecs_cte(SPK)} SELECT vec_id, e, nrm FROM v"
     ).localCheckpoint(eager=True)
     vv = register_temp_view(v, "_srq_v")
-    rows = spark.read.parquet(os.path.join(path, "rows")).distinct()
+    rows = read_parquet(spark, os.path.join(path, "rows")).distinct()
     vrows = register_temp_view(rows, "_srq_rows")
     cos = f"({_dot_sql('a.e', 'b.e', SPK)} / (a.nrm * b.nrm))"
     return spark.sql(
@@ -264,7 +265,7 @@ def semantic_requantize_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame
     S.semantic_index_build(spark, path, "_srt_a")
     S.semantic_index_append(spark, path, "_srt_b")
     S.semantic_index_requantize(spark, path, n_centroids=8, trained=True)
-    rows = spark.read.parquet(os.path.join(path, "rows")).distinct()
+    rows = read_parquet(spark, os.path.join(path, "rows")).distinct()
     vrows = register_temp_view(rows, "_srt_rows")
     return spark.sql(
         f"WITH pairs AS ({semantic_pairs_sql(SPK, vrows)}) "

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog_base import register_views
-from .sources.readers import Tables
+from .sources.readers import Tables, read_parquet
 
 _DR_RANGE = ("2024-01-08", "2024-01-21")
 _DR_CUT = "2024-01-12"  # days strictly below this are forgotten
@@ -86,7 +86,7 @@ def rollup_day_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         SK.hll_rollup_append_day(ev.filter(day == days[0]), path, days[0])
     except ValueError:
         blocked = True
-    store = spark.read.parquet(path).select(
+    store = read_parquet(spark, path).select(
         F.col("day").cast("string").alias("day"), "bucket", "reg"
     )
     return SK.hll_estimate(

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from .functions import dedup as D
 from .functions import text as X
 from .functions.portable import DUCK, SPARK
-from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table
+from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table, read_parquet
 from .catalog_base import register_views
 from .catalog_breadth import _minhash_lsh_pairs_fn
 
@@ -232,7 +232,7 @@ def hll_rollup_grouped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     )
     regs.write.mode("overwrite").partitionBy("day").parquet(path)
-    in_range = spark.read.parquet(path).filter(
+    in_range = read_parquet(spark, path).filter(
         F.col("day").cast("string").between(lo, hi)
     )
     merged = in_range.groupBy("grp", "bucket").agg(F.max("reg").alias("reg"))
@@ -297,7 +297,7 @@ def tdigest_rollup_grouped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdigest_rollup_build_grouped(ev, path, "event_type", "ts", "value")
     est = F.broadcast(tdigest_rollup_range_grouped(spark, path, lo, hi))
     w = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .select("grp", F.explode("weights").alias("w"))
         .groupBy("grp")
@@ -1183,7 +1183,7 @@ def tdigest_rollup_compacted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est = F.broadcast(tdigest_rollup_range(spark, path, lo, hi).select("q", "est"))
     w = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .select(F.explode("weights").alias("w"))
         .agg(F.sum("w").cast("long").alias("total_weight"))

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from .functions import text as X
 from .functions.portable import DUCK, SPARK
-from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table
+from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table, read_parquet
 from .catalog_base import register_views
 from .catalog_r5 import _ROLLUP_RANGE, _mixture_epochs_pick_ctes
 
@@ -161,7 +161,7 @@ def hll_monthly_from_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(path, ignore_errors=True)
     SK.hll_rollup_build(ev, path)
-    regs = spark.read.parquet(path)
+    regs = read_parquet(spark, path)
     monthly = (
         regs.withColumn("month", F.substring(F.col("day").cast("string"), 1, 7))
         .groupBy("month", "bucket")

@@ -48,6 +48,7 @@ from .store_layout import (
     staged_swap,
     write_store_relation,
 )
+from ..sources.readers import read_parquet
 
 _WORD_BITS = 62
 
@@ -197,7 +198,7 @@ def bitmap_rollup_range_daily(
     popcount-sum per day; the range total BIT_ORs the per-day words once
     more before the popcount.  The plan scans only pruned bitmap files
     (never events); shuffles carry word-grain rows."""
-    rows = spark.read.parquet(path).filter(
+    rows = read_parquet(spark, path).filter(
         F.col("day").cast("string").between(lo, hi)
     )
     per_day_word = rows.groupBy(
@@ -240,7 +241,7 @@ def bitmap_rollup_grouped_range(
     """EXACT per-group range distinct counts from the grouped store:
     ``(g, distinct_users)`` over ``[lo, hi]`` — one (g, word) BIT_OR
     over the pruned store rows, then the popcount sum."""
-    rows = spark.read.parquet(path).filter(
+    rows = read_parquet(spark, path).filter(
         F.col("day").cast("string").between(lo, hi)
     )
     return (
@@ -300,7 +301,7 @@ def bitmap_rollup_range_daily_scrubbed(
     tombstone side table; never events."""
     import os
 
-    rows = spark.read.parquet(path).filter(
+    rows = read_parquet(spark, path).filter(
         F.col("day").cast("string").between(lo, hi)
     )
     tomb = os.path.join(path, _TOMBSTONE_DIR)
@@ -308,7 +309,7 @@ def bitmap_rollup_range_daily_scrubbed(
         f.endswith(".parquet") for f in os.listdir(tomb)
     ):
         masks = (
-            spark.read.parquet(tomb)
+            read_parquet(spark, tomb)
             .groupBy("word")
             .agg(F.bit_or("mask").alias("mask"))
         )
@@ -360,7 +361,7 @@ def bitmap_rollup_purge(
 
     tomb = os.path.join(path, _TOMBSTONE_DIR)
     masks = (
-        spark.read.parquet(tomb)
+        read_parquet(spark, tomb)
         .groupBy("word")
         .agg(F.bit_or("mask").alias("mask"))
         .localCheckpoint(eager=True)
@@ -375,7 +376,7 @@ def bitmap_rollup_purge(
         part_dir = os.path.join(path, f"day={day}")
         with staged_swap(part_dir) as (tmp,):
             _mark_compacted_chunks(path, part_dir, scope=day)  # appender guard
-            raw = spark.read.parquet(part_dir)
+            raw = read_parquet(spark, part_dir)
             scrubbed = (
                 raw.groupBy("word")
                 .agg(F.bit_or("bm").alias("bm"))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import read_parquet
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -454,8 +456,8 @@ def ivf_load(spark, path: str) -> tuple[DataFrame, DataFrame]:
     from .store_layout import _read_int_marker, _recover_aside
 
     _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    inverted = spark.read.parquet(os.path.join(path, "inverted")).select(
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
+    inverted = read_parquet(spark, os.path.join(path, "inverted")).select(
         "vec_id", F.col("cid").cast("long").alias("cid"), "e"
     )
     cut = _read_int_marker(path, _IVF_RETENTION_FILE)
@@ -577,8 +579,8 @@ def ann_pq_persisted_search(
     from .store_layout import _recover_aside
 
     _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
-    cb = spark.read.parquet(os.path.join(path, "codebook"))
-    codes = spark.read.parquet(os.path.join(path, "codes"))
+    cb = read_parquet(spark, os.path.join(path, "codebook"))
+    codes = read_parquet(spark, os.path.join(path, "codes"))
     d = F.round(
         _dot(F.col("qe"), F.col("qe"))
         - 2 * _dot(F.col("qe"), F.col("c"))
@@ -716,9 +718,9 @@ def ann_ivfpq_persisted_search(
     from .store_layout import _recover_aside
 
     _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    cb = spark.read.parquet(os.path.join(path, "codebook"))
-    codes = spark.read.parquet(os.path.join(path, "codes")).select(
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
+    cb = read_parquet(spark, os.path.join(path, "codebook"))
+    codes = read_parquet(spark, os.path.join(path, "codes")).select(
         "vec_id", "s", "code", F.col("cid").cast("long").alias("cid")
     )
     distc = F.round(
@@ -802,7 +804,7 @@ def _ivf_tombstones(spark, path: str):
         f.endswith(".parquet") for f in os.listdir(d)
     ):
         return None
-    return spark.read.parquet(d).select("vec_id").distinct()
+    return read_parquet(spark, d).select("vec_id").distinct()
 
 
 _IVF_RETENTION_FILE = ".retention"
@@ -843,7 +845,7 @@ def ivf_append(spark, path: str, vecs: DataFrame) -> None:
     reclaims them physically."""
     import os
 
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
     assign_clusters(vecs, cents).write.mode("append").partitionBy("cid").parquet(
         os.path.join(path, "inverted")
     )

@@ -47,6 +47,7 @@ from .store_layout import (
     staged_swap,
     write_store_relation,
 )
+from ..sources.readers import read_parquet
 
 # MinHash parameters: 12 hash functions in 4 bands × 3 rows.
 N_HASHES = 12
@@ -583,7 +584,7 @@ def lsh_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> N
     from pyspark.sql import functions as F
 
     def _compact_one(sub, part, tmp):
-        raw = spark.read.parquet(os.path.join(path, sub))
+        raw = read_parquet(spark, os.path.join(path, sub))
         df = _lsh_retained(spark, path, raw).distinct()
         if part:
             df = df.select(
@@ -647,13 +648,13 @@ def lsh_index_probe(spark, path: str, src: str, exclude=None):
         return out
 
     corpus_h = (
-        _scrub(spark.read.parquet(os.path.join(path, "digests")))
+        _scrub(read_parquet(spark, os.path.join(path, "digests")))
         .select("h")
         .distinct()
     )
     corpus_bands = (
         _scrub(
-            spark.read.parquet(os.path.join(path, "bands")).select(
+            read_parquet(spark, os.path.join(path, "bands")).select(
                 F.col("band").cast("int").alias("band"), "sig", "doc_id"
             )
         )
@@ -719,7 +720,7 @@ def _lsh_tombstones(spark, path: str):
 
     tomb = os.path.join(path, _LSH_TOMBSTONE_DIR)
     if os.path.isdir(tomb) and any(f.endswith(".parquet") for f in os.listdir(tomb)):
-        return spark.read.parquet(tomb).distinct()
+        return read_parquet(spark, tomb).distinct()
     return None
 
 
@@ -767,7 +768,7 @@ def lsh_index_purge(spark, path: str, target_file_bytes: int = 256 << 20) -> int
     for sub, part in (("digests", None), ("bands", "band")):
         cur = os.path.join(path, sub)
         with staged_swap(cur) as (tmp,):
-            raw = spark.read.parquet(cur)
+            raw = read_parquet(spark, cur)
             kept = (
                 _lsh_retained(spark, path, raw)
                 .distinct()
@@ -1197,7 +1198,7 @@ def setjoin_index_build(spark, path: str, table_expr: str) -> None:
     sh = _shingle_rel(spark, table_expr)
     order = sh.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
     order.write.mode("overwrite").parquet(os.path.join(path, "order"))
-    order = spark.read.parquet(os.path.join(path, "order"))
+    order = read_parquet(spark, os.path.join(path, "order"))
     # r17 (VERDICT #3): the verify-side doc-set arrays are STORE STATE —
     # maintained here and by append/compact — so the pairs read joins
     # pre-built sets instead of re-grouping the corpus shingles per read.
@@ -1227,7 +1228,7 @@ def setjoin_index_append(spark, path: str, table_expr: str, sh=None) -> None:
 
     if sh is None:
         sh = _shingle_rel(spark, table_expr)
-    order = spark.read.parquet(os.path.join(path, "order"))
+    order = read_parquet(spark, os.path.join(path, "order"))
     writes = [lambda: sh.write.mode("append").parquet(os.path.join(path, "shingles"))]
     # increment-sized set rows; replays write duplicate rows the read's
     # union-merge absorbs.  Only maintained when the store HAS a sets/
@@ -1263,7 +1264,7 @@ def setjoin_index_compact(spark, path: str) -> None:
     subs = ("shingles", "order", "prefix", "sets")
     with staged_swap(*[os.path.join(path, sub) for sub in subs]) as tmps:
         sh = _setjoin_retained(
-            spark, path, spark.read.parquet(os.path.join(path, "shingles"))
+            spark, path, read_parquet(spark, os.path.join(path, "shingles"))
         ).distinct()
         sh = sh.localCheckpoint(eager=True)
         order = sh.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
@@ -1334,7 +1335,7 @@ def _setjoin_sets_raw(spark, path: str):
 
     if not _setjoin_has_sets(path):
         return None
-    return _setjoin_retained(spark, path, spark.read.parquet(os.path.join(path, "sets")))
+    return _setjoin_retained(spark, path, read_parquet(spark, os.path.join(path, "sets")))
 
 
 def _setjoin_verify_exact(cand, sets_a, sets_b, broadcast_sets=False):
@@ -1419,7 +1420,7 @@ def setjoin_index_pairs(spark, path: str):
     import os
 
     pref = _setjoin_retained(
-        spark, path, spark.read.parquet(os.path.join(path, "prefix"))
+        spark, path, read_parquet(spark, os.path.join(path, "prefix"))
     ).distinct()
     raw_sets = _setjoin_sets_raw(spark, path)
     if raw_sets is not None:
@@ -1427,7 +1428,7 @@ def setjoin_index_pairs(spark, path: str):
             spark, None, pref, sets=_setjoin_merge_sets(raw_sets)
         )
     sh = _setjoin_retained(
-        spark, path, spark.read.parquet(os.path.join(path, "shingles"))
+        spark, path, read_parquet(spark, os.path.join(path, "shingles"))
     )
     return _setjoin_pairs_from(spark, sh, pref)
 
@@ -1478,10 +1479,10 @@ def setjoin_index_probe(spark, path: str, table_expr: str, sh=None, exclude=None
     # instead of materializing corpus-scale relations per probe (r10
     # review finding).
     bsh = sh if sh is not None else _shingle_rel(spark, table_expr)
-    order = spark.read.parquet(os.path.join(path, "order"))
+    order = read_parquet(spark, os.path.join(path, "order"))
     bpref = _prefix_under_order(bsh, order)
     spref = _setjoin_retained(
-        spark, path, spark.read.parquet(os.path.join(path, "prefix"))
+        spark, path, read_parquet(spark, os.path.join(path, "prefix"))
     ).distinct()
     # store verify side (r17): the persisted sets/ rows when the store
     # has them — the probe then never scans the corpus-scale shingle
@@ -1493,7 +1494,7 @@ def setjoin_index_probe(spark, path: str, table_expr: str, sh=None, exclude=None
         None
         if raw_sets is not None
         else _setjoin_retained(
-            spark, path, spark.read.parquet(os.path.join(path, "shingles"))
+            spark, path, read_parquet(spark, os.path.join(path, "shingles"))
         )
     )
     if exclude is not None:
@@ -1657,7 +1658,7 @@ def _setjoin_tombstones(spark, path: str):
     if os.path.isdir(tomb) and any(
         f.endswith(".parquet") for f in os.listdir(tomb)
     ):
-        return spark.read.parquet(tomb).distinct()
+        return read_parquet(spark, tomb).distinct()
     return spark.createDataFrame([], "doc_id long")
 
 
@@ -1676,7 +1677,7 @@ def setjoin_index_pairs_scrubbed(spark, path: str):
     # once instead of re-shuffling it per join side
     tomb = _setjoin_tombstones(spark, path).localCheckpoint(eager=True)
     pref = (
-        _setjoin_retained(spark, path, spark.read.parquet(os.path.join(path, "prefix")))
+        _setjoin_retained(spark, path, read_parquet(spark, os.path.join(path, "prefix")))
         .distinct()
         .join(F.broadcast(tomb), "doc_id", "left_anti")
     )
@@ -1687,7 +1688,7 @@ def setjoin_index_pairs_scrubbed(spark, path: str):
             spark, None, pref, sets=_setjoin_merge_sets(scrubbed)
         )
     sh = (
-        _setjoin_retained(spark, path, spark.read.parquet(os.path.join(path, "shingles")))
+        _setjoin_retained(spark, path, read_parquet(spark, os.path.join(path, "shingles")))
         .join(F.broadcast(tomb), "doc_id", "left_anti")
     )
     return _setjoin_pairs_from(spark, sh, pref)
@@ -1713,7 +1714,7 @@ def setjoin_index_purge(spark, path: str) -> int:
         with staged_swap(os.path.join(path, sub)) as (tmp,):
             (
                 _setjoin_retained(
-                    spark, path, spark.read.parquet(os.path.join(path, sub))
+                    spark, path, read_parquet(spark, os.path.join(path, sub))
                 )
                 .distinct()
                 .join(F.broadcast(tomb), "doc_id", "left_anti")
@@ -1729,7 +1730,7 @@ def setjoin_index_purge(spark, path: str) -> int:
     with staged_swap(os.path.join(path, "sets")) as (tmp,):
         _setjoin_doc_sets(
             _setjoin_retained(
-                spark, path, spark.read.parquet(os.path.join(path, "shingles"))
+                spark, path, read_parquet(spark, os.path.join(path, "shingles"))
             )
         ).localCheckpoint(eager=True).write.mode("overwrite").parquet(tmp)
     shutil.rmtree(os.path.join(path, _SETJOIN_TOMBSTONE_DIR), ignore_errors=True)
@@ -1812,12 +1813,12 @@ def _simhash_store_rows(spark, path: str):
 
     from pyspark.sql import functions as F
 
-    rows = spark.read.parquet(path).distinct()
+    rows = read_parquet(spark, path).distinct()
     tomb = os.path.join(path, _SETJOIN_TOMBSTONE_DIR)
     if os.path.isdir(tomb) and any(
         f.endswith(".parquet") for f in os.listdir(tomb)
     ):
-        doomed = spark.read.parquet(tomb).distinct()
+        doomed = read_parquet(spark, tomb).distinct()
         rows = rows.join(F.broadcast(doomed), "doc_id", "left_anti")
     return rows
 

@@ -16,6 +16,7 @@ from .store_layout import (
     _write_int_marker_monotone,
     compact_day,
 )
+from ..sources.readers import read_parquet
 
 
 # ------------------------------------------------------------------ #
@@ -312,7 +313,7 @@ def mg_rollup_range_topk(
     contributing at most its threshold (plus compaction's absorbed
     ``ube``)."""
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .distinct()  # replay absorption (SET merge class)
     )
@@ -453,7 +454,7 @@ def mg_rollup_grouped_range_topk(
     from pyspark.sql import Window
 
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .distinct()  # replay absorption (SET merge class)
     )
@@ -641,7 +642,7 @@ def mg_rollup_grouped_chunked_range_topk(
     from pyspark.sql import Window
 
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .distinct()  # replay absorption (SET merge class)
     )

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .portable import DUCK, SPARK
+from ..sources.readers import read_parquet
 
 
 # --------------------------------------------------------------------- #
@@ -571,7 +572,7 @@ def semantic_index_assign(spark, path: str, table_expr: str, vecs=None):
 
     if vecs is None:
         vecs = _semantic_vecs(spark, table_expr)
-    cent = spark.read.parquet(os.path.join(path, "centroids"))
+    cent = read_parquet(spark, os.path.join(path, "centroids"))
     vv = register_temp_view(vecs, "_semx_v")
     vc = register_temp_view(cent, "_semx_c")
     return spark.sql(semantic_assign_under_sql(SPARK, vv, vc))
@@ -667,13 +668,13 @@ def _semantic_store_rows(spark, path: str):
 
     _recover_aside(path)  # crashed root swap -> auto-heal (r12 ADVICE)
     rows = _sem_retained(
-        path, spark.read.parquet(os.path.join(path, "rows"))
+        path, read_parquet(spark, os.path.join(path, "rows"))
     ).distinct()
     tomb = os.path.join(path, _SEM_TOMBSTONE_DIR)
     if os.path.isdir(tomb) and any(
         f.endswith(".parquet") for f in os.listdir(tomb)
     ):
-        doomed = spark.read.parquet(tomb).distinct()
+        doomed = read_parquet(spark, tomb).distinct()
         rows = rows.join(F.broadcast(doomed), "vec_id", "left_anti")
     return rows
 

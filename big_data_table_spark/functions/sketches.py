@@ -68,6 +68,7 @@ from .store_layout import (
     compact_day,
     staged_swap,
 )
+from ..sources.readers import read_parquet
 
 _MOD = 4294967296  # 2^32
 _C1 = 0x85EBCA6B
@@ -1366,7 +1367,7 @@ def hll_stream_sink_compact(spark, stream_dir: str, rollup_path: str) -> None:
     collapses to days·m, and every range/rolling query downstream runs
     against the same store API as the batch-built rollup."""
     regs = (
-        spark.read.parquet(stream_dir)
+        read_parquet(spark, stream_dir)
         .groupBy("day", "bucket")
         .agg(F.max("reg").alias("reg"))
     )
@@ -1383,7 +1384,7 @@ def hll_rollup_range_estimate(
     rollup parquet (partition-pruned on day) and never the base table;
     by the HLL merge law the MAX-merged estimate equals the direct
     estimate over the range's raw events bit-for-bit."""
-    regs = spark.read.parquet(path)
+    regs = read_parquet(spark, path)
     in_range = regs.filter(F.col("day").cast("string").between(lo, hi))
     merged = in_range.groupBy("bucket").agg(F.max("reg").alias("reg"))
     n_days = in_range.select("day").distinct().agg(
@@ -1471,7 +1472,7 @@ def bloom_index_compact(spark, path: str) -> int:
 
     with staged_swap(path) as (tmp,):
         m, k = _bloom_meta(path)
-        spark.read.parquet(path).distinct().coalesce(1).write.mode(
+        read_parquet(spark, path).distinct().coalesce(1).write.mode(
             "overwrite"
         ).parquet(tmp)
         with open(_bloom_meta_path(tmp), "w") as fh:
@@ -1489,7 +1490,7 @@ def bloom_index_probe(spark, path: str, df: DataFrame, value_col: str) -> DataFr
     ``possible`` for an unseen key is the Bloom false-positive case the
     catalog entry audits against exact membership."""
     m, k = _bloom_meta(path)
-    store = F.broadcast(spark.read.parquet(path).distinct())
+    store = F.broadcast(read_parquet(spark, path).distinct())
     hh = _double_hashed_values(df, value_col)
     i = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("i")
     pos = ((F.col("h1") + F.col("i") * (F.col("h2") * 2 + 1)) % m).alias("pos")
@@ -1916,7 +1917,7 @@ def cms_rollup_range_estimates(
     ``checkpoint=False`` keeps the pruned file scan visible for the
     plan-pinning test."""
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .groupBy("rw", "cl")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
@@ -1993,7 +1994,7 @@ def cms_rollup_grouped_range_estimates(
     the MIN is taken within the key's own group's counter table, and a
     (g, v) pair with no in-range counters correctly estimates 0."""
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .groupBy("g", "rw", "cl")
         .agg(F.sum("cnt").cast("long").alias("cnt"))

@@ -74,6 +74,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import read_parquet
+
 
 def parallel_store_writes(*thunks) -> None:
     """Run INDEPENDENT store-write jobs concurrently from a small driver
@@ -653,7 +655,7 @@ def compact_day(spark, path: str, day: str, write, chunked: bool = False) -> int
         if chunked:
             _mark_compacted_chunks(path, part_dir, scope=day)
             dest = os.path.join(tmp, f"chunk={COMPACT_CHUNK}")
-        write(spark.read.parquet(part_dir), dest)
+        write(read_parquet(spark, part_dir), dest)
     return _data_file_count(part_dir)
 
 

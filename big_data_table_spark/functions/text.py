@@ -27,6 +27,7 @@ from .store_layout import (
     write_store_relation,
 )
 from . import dedup as _dedup
+from ..sources.readers import read_parquet
 
 # marker stopwords per language for the n-gram/stopword heuristic
 _LANG_MARKERS = {
@@ -394,7 +395,7 @@ def bm25_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -> 
         with staged_swap(cur) as (tmp,):
             if sub == "postings":  # the appender guard, before any swap
                 _mark_compacted_chunks(path, cur)
-            raw = spark.read.parquet(cur)
+            raw = read_parquet(spark, cur)
             merged = (
                 _bm25_retained(path, raw, spark=spark)
                 .groupBy(*keys)
@@ -446,7 +447,7 @@ def _bm25_tombstones(spark, path: str):
 
     tomb = os.path.join(path, _BM25_TOMBSTONE_DIR)
     if os.path.isdir(tomb) and any(f.endswith(".parquet") for f in os.listdir(tomb)):
-        return spark.read.parquet(tomb).distinct()
+        return read_parquet(spark, tomb).distinct()
     return None
 
 
@@ -495,7 +496,7 @@ def _bm25_store_tf(spark, path: str):
 
     return (
         _bm25_retained(
-            path, spark.read.parquet(os.path.join(path, "postings")), spark=spark
+            path, read_parquet(spark, os.path.join(path, "postings")), spark=spark
         )
         .filter(F.col("tk").isin(list(_BM25_QUERY_TERMS)))
         .groupBy("doc_id", "tk")
@@ -522,7 +523,7 @@ def bm25_index_topk(spark, path: str, k: int = 20):
     # tests/test_round10.py asserts the scan shape on the lazy form
     tf = _bm25_store_tf(spark, path).localCheckpoint(eager=True)
     dl = (
-        _bm25_retained(path, spark.read.parquet(os.path.join(path, "dl")), spark=spark)
+        _bm25_retained(path, read_parquet(spark, os.path.join(path, "dl")), spark=spark)
         .groupBy("doc_id")
         .agg(F.sum("dl").cast("long").alias("dl"))
         .localCheckpoint(eager=True)  # feeds the corpus scalar AND scoring
@@ -914,7 +915,7 @@ def winnow_index_probe(spark, path: str, table: str):
     # DISTINCT absorbs replayed appends; checkpointed so the three
     # consumers (attribution join, fp-set, distinct) share one store scan
     store = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .select(F.col("doc_id").alias("cid"), "fp")
         .distinct()
         .localCheckpoint(eager=True)
@@ -967,7 +968,7 @@ def winnow_index_compact(spark, path: str, target_file_bytes: int = 256 << 20) -
     scale, never one task for a TB store).  Returns the data-file count
     after."""
     with staged_swap(path) as (tmp,):
-        raw = spark.read.parquet(path)
+        raw = read_parquet(spark, path)
         write_store_relation(
             raw.distinct(), tmp, "doc_id", sized_on=raw, target_file_bytes=target_file_bytes
         )

@@ -24,8 +24,9 @@ Import discipline: the murmur3-finalizer kernels and shared helpers
 stay in sketches.py; this module imports them INSIDE functions, never
 at module top, so the sketches -> theta_store re-export and a direct
 ``import theta_store`` both resolve regardless of which module loads
-first (no circular-import window).  ``store_layout`` imports nothing
-from the package, so its helpers import at module top.
+first (no circular-import window).  ``store_layout`` imports only
+``sources.readers`` from the package, so its helpers and
+``read_parquet`` import at module top.
 
 Reference parity note: the reference (jangorecki/big.data.table,
 R/big.data.table.R) has no persisted sketch stores — declared
@@ -39,6 +40,7 @@ from pyspark.sql import functions as F
 
 from .portable import SPARK
 from .store_layout import _check_append_day, compact_all_days, compact_day
+from ..sources.readers import read_parquet
 
 
 def _theta_day_sample(df: DataFrame, value_col: str, k: int) -> DataFrame:
@@ -139,7 +141,7 @@ def theta_rollup_range_estimate(
 
     full = float(_MOD)
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .distinct()  # replay absorption (SET merge class)
     )
@@ -283,7 +285,7 @@ def theta_rollup_grouped_range_estimate(
 
     full = float(_MOD)
     rows = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("day").cast("string").between(lo, hi))
         .distinct()
         .localCheckpoint(eager=True)

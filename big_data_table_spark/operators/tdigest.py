@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.store_layout import _check_append_day, compact_all_days, compact_day
+from ..sources.readers import read_parquet
 
 __all__ = [
     "tdigest_quantiles",
@@ -383,7 +384,7 @@ def tdigest_rollup_range(
     ``(q, est)`` for days in ``[lo, hi]`` — merges the range's digest
     rows (days × ~delta centroids) and never rescans the raw values."""
     qs = [float(q) for q in quantiles]
-    digests = spark.read.parquet(path).filter(
+    digests = read_parquet(spark, path).filter(
         F.col("day").cast("string").between(lo, hi)
     )
 
@@ -421,7 +422,7 @@ def tdigest_rolling_quantiles(
     100 TB a rolling p99 over any horizon costs days·~delta centroid
     rows from the store; raw values are read once, at build time."""
     qs = [float(q) for q in quantiles]
-    d = spark.read.parquet(path).select(
+    d = read_parquet(spark, path).select(
         F.datediff(F.col("day").cast("date"), F.lit("1970-01-01").cast("date"))
         .cast("long")
         .alias("day_num"),
@@ -486,7 +487,7 @@ def tdigest_rollup_range_grouped(
     ``(grp, q, est)`` for days in ``[lo, hi]`` — merges each group's
     digest rows over the partition-pruned range."""
     qs = [float(q) for q in quantiles]
-    digests = spark.read.parquet(path).filter(
+    digests = read_parquet(spark, path).filter(
         F.col("day").cast("string").between(lo, hi)
     )
 

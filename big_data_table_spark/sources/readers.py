@@ -10,15 +10,32 @@ Reference surface being re-expressed (SURVEY.md §2 "Scans / sources"):
 * parquet fixtures                     (TESTDATA.md; not in the reference)
 
 All readers return plain ``DataFrame``; `BigDataTable` wraps them.
+
+Parquet footer rule: :func:`read_parquet` is the package's one parquet
+read.  Like the reference's zero-row local proxy that carries its
+columns (as.big.data.table.R:4-14), opening a table costs no pass over
+the shards: the data schema comes from ONE footer read on the driver —
+the path itself for a file, else the first data file of a sorted walk
+that skips ``.``/``_`` names as Spark's listing does and stops at the
+first match — and is handed to ``spark.read.schema``, so Spark starts no
+schema-inference job.  A Spark-written footer carries Spark's own row
+schema, used as is; other footers (the pyarrow-written fixtures) map
+parquet types to Spark types under the same session confs Spark's
+converter reads.  Spark still discovers ``key=value`` partition columns
+from the paths.  Non-local and glob paths, a missing path or one with no
+data file, and types the mapping does not know fall back to Spark's own
+inference, with the same schema or error as before.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 FIXTURE_TABLES = (
     "region",
@@ -51,8 +68,189 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    ensure_session_confs(spark)
-    return spark.read.parquet(path)
+    """Parquet read whose schema comes from one footer, read on the driver.
+
+    ``spark.read.parquet`` starts a Spark job to infer the schema even
+    for a single file; handing it the footer's data columns skips that
+    job, so opening a table costs no pass over the shards.  Spark still
+    lists the files and discovers ``key=value`` partition columns from
+    the paths exactly as before.  Where :func:`_footer_schema` declines,
+    Spark infers as it always did, with the same schema or error.
+    """
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter: ``.``/``_`` names (a ``_k=v`` partition dir
+    excepted) and files still being copied are not data."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(path: str) -> tuple[str, list[str]] | None:
+    """The footer to read for ``path`` plus the partition-column names on
+    the way to it: ``path`` itself for a file, else the first data file
+    of a sorted depth-first walk that stops there.  ``None`` when there
+    is no such file or a summary file (which Spark would prefer) shows
+    up on the way."""
+    if os.path.isfile(path):
+        return path, []
+
+    def walk(d: str, parts: list[str]):
+        try:
+            entries = sorted(os.scandir(d), key=lambda e: e.name)
+        except OSError:
+            return None
+        for e in entries:
+            if e.name.startswith(_SUMMARY_FILES):
+                return None
+            if _hidden(e.name):
+                continue
+            if not e.is_dir():
+                return e.path, parts
+            if "=" in e.name:
+                found = walk(e.path, parts + [e.name.split("=", 1)[0]])
+            else:
+                found = walk(e.path, parts)
+            if found is not None:
+                return found
+        return None
+
+    return walk(path, [])
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The data schema Spark would infer for ``path``, learned from one
+    footer without a Spark job; ``None`` where Spark must infer itself:
+    a non-local or glob path, no data file, an unreadable footer, a type
+    the mapping does not know, or a footer column that is also a
+    partition directory name."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+    if "://" in path or any(c in path for c in "*?[{\\"):
+        return None
+    found = _first_data_file(path)
+    if found is None:
+        return None
+    file, part_cols = found
+    # a footer this cannot read or parse goes to Spark's own inference,
+    # which reads it or raises the error a plain read always raised
+    try:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_metadata(file)
+        row_schema = (meta.metadata or {}).get(_SPARK_ROW_SCHEMA)
+        if row_schema is not None:
+            schema = T.StructType.fromJson(json.loads(row_schema))
+        else:
+            schema = _parquet_to_spark(spark, meta.schema)
+    except Exception:
+        return None
+    if schema is None:
+        return None
+    names = {f.name.lower() for f in schema.fields}
+    if any(p.lower() in names for p in part_cols):
+        return None
+    return schema
+
+
+# session confs the parquet -> Spark type mapping depends on
+_BINARY_AS_STRING = "spark.sql.parquet.binaryAsString"
+_INT96_AS_TIMESTAMP = "spark.sql.parquet.int96AsTimestamp"
+_INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _parquet_to_spark(spark: SparkSession, pq_schema) -> T.StructType | None:
+    """Spark's ``ParquetToSparkSchemaConverter`` for the shapes files not
+    written by Spark use here: top-level primitives and standard
+    three-level lists of them.  ``None`` for anything else (unsigned
+    ints, TIME, INTERVAL, UUID, structs, maps, legacy lists), so Spark
+    converts those itself.  Nullability is left to Spark, which makes
+    every read column nullable."""
+    conf: dict[str, bool] = {}
+
+    def flag(key: str) -> bool:
+        if key not in conf:
+            conf[key] = spark.conf.get(key).lower() == "true"
+        return conf[key]
+
+    def leaf(col):
+        phys = col.physical_type
+        logical = json.loads(col.logical_type.to_json())
+        kind = logical["Type"]
+        if kind == "None":
+            if col.converted_type != "NONE":
+                return None
+            if phys == "BYTE_ARRAY":
+                return T.StringType() if flag(_BINARY_AS_STRING) else T.BinaryType()
+            if phys == "INT96":
+                return T.TimestampType() if flag(_INT96_AS_TIMESTAMP) else None
+            return {
+                "BOOLEAN": T.BooleanType(),
+                "INT32": T.IntegerType(),
+                "INT64": T.LongType(),
+                "FLOAT": T.FloatType(),
+                "DOUBLE": T.DoubleType(),
+                "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+            }.get(phys)
+        if kind == "String" and phys == "BYTE_ARRAY":
+            return T.StringType()
+        if kind == "Date" and phys == "INT32":
+            return T.DateType()
+        if kind == "Int" and logical["isSigned"]:
+            return {
+                ("INT32", 8): T.ByteType(),
+                ("INT32", 16): T.ShortType(),
+                ("INT32", 32): T.IntegerType(),
+                ("INT64", 64): T.LongType(),
+            }.get((phys, logical["bitWidth"]))
+        if kind == "Decimal":
+            limit = {"INT32": 9, "INT64": 18}.get(phys, 38)
+            if col.precision > limit:
+                return None
+            return T.DecimalType(col.precision, col.scale)
+        if kind == "Timestamp" and phys == "INT64":
+            if logical["timeUnit"] == "nanoseconds":
+                return T.LongType() if flag(_NANOS_AS_LONG) else None
+            if logical["isAdjustedToUTC"] or not flag(_INFER_NTZ):
+                return T.TimestampType()
+            return T.TimestampNTZType()
+        return None
+
+    import pyarrow as pa
+
+    # each accepted field holds exactly one leaf column, so field i's
+    # leaf is column i
+    fields = []
+    for i, af in enumerate(pq_schema.to_arrow_schema()):
+        col = pq_schema.column(i)
+        path = col.path.split(".")
+        if len(path) == 1 and col.max_repetition_level == 0:
+            spark_type = leaf(col)
+        elif (
+            pa.types.is_list(af.type)
+            and len(path) == 3
+            and col.max_repetition_level == 1
+            and path[1] not in ("array", f"{af.name}_tuple")
+        ):
+            element = leaf(col)
+            spark_type = None if element is None else T.ArrayType(element)
+        else:
+            return None
+        if spark_type is None:
+            return None
+        fields.append(T.StructField(af.name, spark_type))
+    return T.StructType(fields)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,7 +273,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     * plain ``timestamp`` — already canonical.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -88,6 +286,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table by name, normalizing quirky physical types."""
     if name == "events":
         return load_events(spark, sf_dir)
+    ensure_session_confs(spark)
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.readers import ensure_session_confs
+from ..sources.readers import ensure_session_confs, load_table, read_parquet
 
 _qid = itertools.count()
 
@@ -43,11 +43,12 @@ def _raw_schema(ts_type: T.DataType) -> T.StructType:
 
 
 def _probe_ts(spark: SparkSession, sf_dir: str) -> str:
-    """One footer-only batch read to learn the fixture's ``ts`` physical
-    ("bigint" nanos / "timestamp_ntz" micros / "timestamp").  The file
-    stream source needs the schema declared up front, so the probe cannot
-    be folded into the stream plan itself; it reads no row groups."""
-    batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    """The fixture's raw ``ts`` type ("bigint" nanos / "timestamp_ntz"
+    micros / "timestamp"), learned from the events file's footer on the
+    driver: no Spark job, no row groups.  The file stream source needs
+    the schema declared up front, so the probe cannot be folded into the
+    stream plan itself."""
+    batch = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     return dict(batch.dtypes)["ts"]
 
 
@@ -304,7 +305,7 @@ def foreachbatch_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-    back = spark.read.parquet(out_dir)  # batch=<id> becomes a partition col
+    back = read_parquet(spark, out_dir)  # batch=<id> becomes a partition col
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("v"),
@@ -349,7 +350,7 @@ def stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-    back = spark.read.parquet(out_dir).groupBy("bucket").agg(
+    back = read_parquet(spark, out_dir).groupBy("bucket").agg(
         F.max("reg").alias("reg")
     )
     return SK.hll_estimate_global(back)
@@ -413,7 +414,7 @@ def stream_hll_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup_dir = out_dir + "_store"
     shutil.rmtree(rollup_dir, ignore_errors=True)
     SK.hll_stream_sink_compact(spark, out_dir, rollup_dir)
-    store = spark.read.parquet(rollup_dir).select(
+    store = read_parquet(spark, rollup_dir).select(
         F.col("day").cast("string").alias("day"), "bucket", "reg"
     )
     return SK.hll_estimate(store, ["day"]).select("day", "hll_est")
@@ -425,10 +426,8 @@ def enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated.  The static side is planned per micro-batch (broadcast —
     the standard streaming-enrichment shape; no watermark needed on the
     static side)."""
-    import os
-
     ev = read_events_stream(spark, sf_dir)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).select(
+    nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("nk"), "n_name"
     )
     enriched = ev.withColumn("nk", F.col("user_id") % 25).join(
@@ -481,9 +480,7 @@ def versioned_dim(spark: SparkSession, sf_dir: str, n_versions: int = 10) -> Dat
     interval-ized with ``lead`` so membership is a plain range
     predicate.  The interval-ization runs ONCE, batch-side, on the
     static dim — that is what makes the streaming as-of below stateless."""
-    import os
-
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).select(
+    nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("nk"), "n_name"
     )
     versions = nation.select(
@@ -673,7 +670,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     merged = (
-        spark.read.parquet(out_dir)
+        read_parquet(spark, out_dir)
         .groupBy("rw", "cl")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
         .localCheckpoint(eager=True)
@@ -765,7 +762,7 @@ def stream_tdigest_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     est = F.broadcast(
-        spark.read.parquet(out_dir)
+        read_parquet(spark, out_dir)
         .groupBy("day")
         .applyInPandas(
             merge_day, schema="day string, q double, est double, n_values long"
@@ -930,7 +927,7 @@ def stream_packing_ledger(
         finally:
             q.stop()
 
-    ledger = spark.read.parquet(ledger_dir).distinct()
+    ledger = read_parquet(spark, ledger_dir).distinct()
     packed = pack_sequences(
         ledger, budget=2048, id_col="doc_id", tokens_col="n_tokens", hash_col="h"
     )
@@ -1053,7 +1050,7 @@ def stream_setjoin_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     return (
-        spark.read.parquet(sink)
+        read_parquet(spark, sink)
         .select("doc_a", "doc_b", "i", "n_a", "n_b", "jaccard")
     )
 
@@ -1128,7 +1125,7 @@ def stream_simhash_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
 
-    return spark.read.parquet(sink).select("doc_a", "doc_b", "hamming")
+    return read_parquet(spark, sink).select("doc_a", "doc_b", "hamming")
 
 
 def stream_semantic_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,7 +1202,7 @@ def stream_semantic_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
 
-    return spark.read.parquet(sink).select("id_a", "id_b", "cos_sim")
+    return read_parquet(spark, sink).select("id_a", "id_b", "cos_sim")
 
 
 def stream_crawl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1293,7 +1290,7 @@ def stream_crawl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     return (
-        spark.read.parquet(sink)
+        read_parquet(spark, sink)
         .groupBy("batch", "decision")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
@@ -1358,7 +1355,7 @@ def stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
 
-    m = spark.read.parquet(sink)
+    m = read_parquet(spark, sink)
     return m.select(
         "batch",
         "n_docs",

@@ -66,6 +66,26 @@ def duck(sf_dir):
     con.close()
 
 
+def jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``.  The call runs under
+    its own job group, counted through the StatusTracker as
+    ``StageLog.run`` does; jobs with no group that appear meanwhile
+    (started by pool threads, which do not inherit the group) count too."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"bdt-jobs-{time.monotonic_ns()}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "jobs_started")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    new = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    return out, len(tracker.getJobIdsForGroup(group)) + len(new)
+
+
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     """Order-insensitive canonical form: columns sorted by name, rows
     sorted by all columns — mirrors the driver's value-hash comparison."""
