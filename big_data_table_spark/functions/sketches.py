@@ -52,7 +52,7 @@ cost ``m`` rows each — no rescan, no raw-value shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .portable import SPARK, bit_xor
@@ -1236,19 +1236,30 @@ def hll_estimate(regs: DataFrame, group_cols: list[str], p: int = 8) -> DataFram
     """Estimate per group from a register table: harmonic mean with the
     linear-counting small-range correction, rounded to 4 decimals (the
     only non-dyadic step is ``ln`` in the small-range branch)."""
-    m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = regs.groupBy(*group_cols).agg(
+    agg = regs.groupBy(*group_cols).agg(*_hll_sums())
+    return agg.select(*group_cols, _hll_est_from_sums(p))
+
+
+def _hll_sums() -> list[Column]:
+    """The two register sums an estimate needs: ``nb`` non-empty buckets
+    and ``s_nz``, the sum of their ``2^-reg``."""
+    return [
         F.count(F.lit(1)).alias("nb"),
         F.sum(F.expr("POWER(2.0, -reg)")).alias("s_nz"),
-    )
+    ]
+
+
+def _hll_est_from_sums(p: int) -> Column:
+    """``hll_est`` from the ``nb``/``s_nz`` columns of ``_hll_sums``."""
+    m = 1 << p
+    alpha = 0.7213 / (1.0 + 1.079 / m)
     s = (F.lit(m) - F.col("nb")).cast("double") + F.col("s_nz")  # empty buckets: 2^-0
     v = (F.lit(m) - F.col("nb")).cast("double")
     e_raw = F.lit(alpha * m * m) / s
     est = F.when(
         (e_raw <= F.lit(2.5 * m)) & (v > 0), F.lit(float(m)) * F.log(F.lit(float(m)) / v)
     ).otherwise(e_raw)
-    return agg.select(*group_cols, F.round(est, 4).alias("hll_est"))
+    return F.round(est, 4).alias("hll_est")
 
 
 def hll_merge(regs_list: list[DataFrame]) -> DataFrame:
@@ -1383,14 +1394,21 @@ def hll_rollup_range_estimate(
     ``(n_days, hll_est)`` for days in ``[lo, hi]``.  The plan scans the
     rollup parquet (partition-pruned on day) and never the base table;
     by the HLL merge law the MAX-merged estimate equals the direct
-    estimate over the range's raw events bit-for-bit."""
+    estimate over the range's raw events bit-for-bit.  One chain of two
+    aggregations: per bucket the register MAX and the set of days seen,
+    then one global row whose day count is the size of the union of those
+    sets (every stored day has at least one bucket row).  An empty range
+    gives no row."""
     regs = read_parquet(spark, path)
     in_range = regs.filter(F.col("day").cast("string").between(lo, hi))
-    merged = in_range.groupBy("bucket").agg(F.max("reg").alias("reg"))
-    n_days = in_range.select("day").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_days")
+    merged = in_range.groupBy("bucket").agg(
+        F.max("reg").alias("reg"), F.collect_set("day").alias("days")
     )
-    return n_days.crossJoin(hll_estimate_global(merged, p))
+    sums = merged.agg(
+        F.size(F.array_distinct(F.flatten(F.collect_list("days")))).cast("long").alias("n_days"),
+        *_hll_sums(),
+    )
+    return sums.filter(F.col("nb") > 0).select("n_days", _hll_est_from_sums(p))
 
 
 # --------------------------------------------------------------------- #

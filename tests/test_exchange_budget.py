@@ -89,10 +89,11 @@ BUDGET = {
                                  # partial->final exchange)
     "approx_distinct_diag": 2,   # exact countDistinct expand (2-phase)
                                  # + HLL++ merge ride along
-    "hll_rollup_persisted": 4,   # range read of the persisted sketch
-                                 # table: register MAX-merge + n_days
-                                 # distinct + 1-row assembly; the build
-                                 # pays its own single agg at write time
+    "hll_rollup_persisted": 2,   # range read of the persisted sketch
+                                 # table: per-bucket register MAX (with
+                                 # its day set) + one global row; the
+                                 # build pays its own single agg at
+                                 # write time
     "theta_overlap_by_source": 3,  # pair assembly over checkpointed
                                  # ≤k-row per-group samples
     "text_token_count_subword": 1,  # doc-words join + per-doc agg; the
@@ -102,7 +103,7 @@ BUDGET = {
                                  # + per-doc count agg
     # round 6, breadth batch (streaming stream_hll_daily excluded like
     # the other foreachBatch entries — counting its plan runs the query)
-    "hll_rollup_incremental": 4,  # same range-read shape as persisted
+    "hll_rollup_incremental": 2,  # same range-read shape as persisted
     "cms_heavy_hitters_by_type": 7,  # grouped sketch + exact + rank
                                  # window + probe joins
     "source_mixture_weights": 3,  # per-source agg + scalar denominator
@@ -117,7 +118,7 @@ BUDGET = {
     "mixture_resample": 5,       # weights agg + scalar denom + source
                                  # rank window + pick join + audit agg
     # round 7
-    "hll_rollup_compacted": 4,   # same range-read shape as persisted —
+    "hll_rollup_compacted": 2,   # same range-read shape as persisted —
                                  # compaction happens before the
                                  # returned plan, which reads only the
                                  # compacted store
