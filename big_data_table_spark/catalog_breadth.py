@@ -15,7 +15,7 @@ from .functions import text as X
 from .functions.portable import DUCK, SPARK
 from .operators import joins as J
 from .operators import windows as W
-from .operators.aggregate import davg, dsum, partials
+from .operators.aggregate import davg, dsum, dsum_revenue, partials
 from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table, read_parquet
 from .catalog_base import register_views
 
@@ -393,9 +393,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue share for one shipdate year.  Part is broadcast; the ratio is
     built from two exact decimal sums."""
     t = Tables(spark, sf_dir)
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
     j = (
         t.lineitem.filter(
             (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
@@ -403,8 +400,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t.part), F.col("l_partkey") == F.col("p_partkey"))
     )
     agg = j.agg(
-        F.sum(F.when(F.col("p_type") == "PROMO", rev)).cast("decimal(38,6)").cast("double").alias("promo"),
-        F.sum(rev).cast("decimal(38,6)").cast("double").alias("total"),
+        dsum_revenue(where=F.col("p_type") == "PROMO").alias("promo"),
+        dsum_revenue().alias("total"),
     )
     return agg.select(
         "promo",
@@ -2143,9 +2140,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     push to their scans; customer is broadcast; the deterministic top-k
     key is (revenue DESC, orderkey ASC)."""
     t = Tables(spark, sf_dir)
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
     joined = (
         t.customer.filter(F.col("c_mktsegment") == "BUILDING")
         .join(t.orders, F.col("c_custkey") == F.col("o_custkey"))
@@ -2154,7 +2148,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_shipdate") > "1997-01-01")
     )
     agg = joined.groupBy("l_orderkey", "o_orderdate").agg(
-        F.sum(rev).cast("decimal(38,6)").cast("double").alias("revenue")
+        dsum_revenue().alias("revenue")
     )
     return (
         agg.select(
@@ -2204,21 +2198,24 @@ GROUP BY o_orderpriority
 """
 
 
-_last_bands: list = []  # previous persisted band table, unpersisted on reuse
+# the last persisted cross-lingual band table: unpersisted BEFORE the next
+# build persists its own, because persisting a plan the cache already
+# holds is a no-op and unpersisting afterwards would drop both
+_last_bands: list = []
 
 
 def _minhash_lsh_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs with the band table computed ONCE and
-    persisted before the self-join (the pure-SQL formulation recomputes
-    the signature pipeline per band and per join side under CTE
-    inlining).  At 100 TB the persisted band table is the natural
-    checkpoint of the dedup pipeline.  Oracle: the single-statement
-    UNION-ALL formulation (functions/dedup.py:minhash_lsh_pairs_sql)."""
+    """MinHash-LSH candidate pairs from the single-pass band table (the
+    pure-SQL formulation recomputes the signature pipeline per band and
+    per join side under CTE inlining).  Both join sides shuffle the same
+    band plan on (band, sig), so AQE computes it once and reuses the
+    exchange; the plan keeps the budgeted 4 exchanges without a cached
+    copy.  (A persisted band table, dropped by the next build, made the
+    first build in a session run 24 jobs and every later one 20.)
+    Oracle: the single-statement UNION-ALL formulation
+    (functions/dedup.py:minhash_lsh_pairs_sql)."""
     register_views(spark, sf_dir)
-    bands = spark.sql(D.minhash_bands_sql(SPARK)).persist()
-    while _last_bands:
-        _last_bands.pop().unpersist()
-    _last_bands.append(bands)
+    bands = spark.sql(D.minhash_bands_sql(SPARK))
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -2245,9 +2242,9 @@ def _crosslingual_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     langs = spark.sql(
         f"SELECT doc_id, pred_lang FROM ({lang_select_sql(SPARK)}) _l"
     )
-    lbands = bands.join(langs, "doc_id").persist()
     while _last_bands:
         _last_bands.pop().unpersist()
+    lbands = bands.join(langs, "doc_id").persist()
     _last_bands.append(lbands)
     a, b = lbands.alias("a"), lbands.alias("b")
     return (

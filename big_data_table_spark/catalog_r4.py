@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.portable import DUCK, SPARK
+from .operators.aggregate import dsum_revenue
 from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table
 
 
@@ -223,14 +224,11 @@ def bucketed_etl_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).saveAsTable("bdt_bkt_lineitem")
     o = spark.table("bdt_bkt_orders")
     li = spark.table("bdt_bkt_lineitem")
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderpriority")
         .agg(
-            F.sum(rev).cast("decimal(38,6)").cast("double").alias("revenue"),
+            dsum_revenue().alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )

@@ -280,16 +280,18 @@ def dedup_lsh_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucket candidates; per threshold in {0.05, 0.5, 0.9}: truth
     pairs, caught pairs, recall, with the candidate-set size alongside.
 
-    Spark plan: truth/band tables each computed ONCE and checkpointed
-    (the banded self-join re-inlines the whole signature chain per
-    reference otherwise), assembly is joins over pair ids."""
+    Spark plan: the truth table and the candidate pairs are each
+    computed ONCE and checkpointed; the band table feeds the candidate
+    self-join once (AQE reuses its exchange for both sides); assembly
+    is joins over pair ids."""
     from .functions import dedup as DD
 
     register_views(spark, sf_dir)
     truth = DD.ngram_jaccard_pairs(spark, threshold=0.05).localCheckpoint(
         eager=True
     )  # DF form: the filtered-shingle set inside is checkpointed once
-    bands = spark.sql(DD.minhash_bands_sql(SPARK)).localCheckpoint(eager=True)
+    # both join sides shuffle the same band plan, so AQE computes it once
+    bands = spark.sql(DD.minhash_bands_sql(SPARK))
     cands = (
         bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
         .join(

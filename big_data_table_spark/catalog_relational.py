@@ -11,7 +11,7 @@ from .core import BigDataTable
 from .functions.portable import DUCK, SPARK
 from .operators import joins as J
 from .operators import windows as W
-from .operators.aggregate import davg, dsum, partials
+from .operators.aggregate import davg, dsum, dsum_revenue, partials
 from .operators.setops import rbindlist
 from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table
 
@@ -27,16 +27,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan reads only the 7 referenced columns with the shipdate filter
     pushed down."""
     li = Tables(spark, sf_dir).lineitem
-    disc_price = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
     return (
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity").alias("sum_qty"),
             dsum("l_extendedprice").alias("sum_base_price"),
-            F.sum(disc_price).cast("decimal(38,6)").cast("double").alias("sum_disc_price"),
+            dsum_revenue().alias("sum_disc_price"),
             davg("l_quantity").alias("avg_qty"),
             davg("l_extendedprice").alias("avg_price"),
             davg("l_discount").alias("avg_disc"),
@@ -173,14 +170,11 @@ def join3_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders ⋈ customer, revenue per market segment.  customer is
     broadcast; the lineitem⋈orders join shuffles on the orderkey."""
     t = Tables(spark, sf_dir)
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
     return (
         t.lineitem.join(t.orders, t.lineitem.l_orderkey == t.orders.o_orderkey)
         .join(F.broadcast(t.customer), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_mktsegment")
-        .agg(F.sum(rev).cast("decimal(38,6)").cast("double").alias("revenue"), F.count(F.lit(1)).alias("n"))
+        .agg(dsum_revenue().alias("revenue"), F.count(F.lit(1)).alias("n"))
     )
 
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.readers import read_parquet
+from ..sources.readers import read_parquet, read_side_table
 
 
 def _dot(a, b):
@@ -799,12 +799,8 @@ def _ivf_tombstones(spark, path: str):
     pre-tombstone plan (the LSH no-tombstone scrub-skip discipline)."""
     import os
 
-    d = os.path.join(path, _IVF_TOMBSTONE_DIR)
-    if not os.path.isdir(d) or not any(
-        f.endswith(".parquet") for f in os.listdir(d)
-    ):
-        return None
-    return read_parquet(spark, d).select("vec_id").distinct()
+    tomb = read_side_table(spark, os.path.join(path, _IVF_TOMBSTONE_DIR))
+    return None if tomb is None else tomb.select("vec_id").distinct()
 
 
 _IVF_RETENTION_FILE = ".retention"

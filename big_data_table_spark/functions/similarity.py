@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .portable import DUCK, SPARK
-from ..sources.readers import read_parquet
+from ..sources.readers import read_parquet, read_side_table
 
 
 # --------------------------------------------------------------------- #
@@ -670,12 +670,9 @@ def _semantic_store_rows(spark, path: str):
     rows = _sem_retained(
         path, read_parquet(spark, os.path.join(path, "rows"))
     ).distinct()
-    tomb = os.path.join(path, _SEM_TOMBSTONE_DIR)
-    if os.path.isdir(tomb) and any(
-        f.endswith(".parquet") for f in os.listdir(tomb)
-    ):
-        doomed = read_parquet(spark, tomb).distinct()
-        rows = rows.join(F.broadcast(doomed), "vec_id", "left_anti")
+    tomb = read_side_table(spark, os.path.join(path, _SEM_TOMBSTONE_DIR))
+    if tomb is not None:
+        rows = rows.join(F.broadcast(tomb.distinct()), "vec_id", "left_anti")
     return rows
 
 

@@ -97,6 +97,22 @@ def davg(col: str | Column, scale: int = 6) -> Column:
     )
 
 
+def dsum_revenue(
+    price: str = "l_extendedprice", discount: str = "l_discount", where: Column | None = None
+) -> Column:
+    """Exact summed revenue as a double, the TPC-H ``price·(1 - discount)``
+    sum every revenue query shares: the product of the two
+    ``decimal(18,6)`` casts is exact (``decimal(38,12)``), summed exactly,
+    rounded HALF_UP to scale 6 and cast to double, the form the DuckDB
+    oracles spell out.  ``where`` keeps only the rows it holds for."""
+    rev = F.col(price).cast("decimal(18,6)") * (
+        F.lit(1).cast("decimal(18,6)") - F.col(discount).cast("decimal(18,6)")
+    )
+    if where is not None:
+        rev = F.when(where, rev)
+    return F.sum(rev).cast("decimal(38,6)").cast("double")
+
+
 def histogram_quantiles(
     df: DataFrame,
     by: str | Iterable[str],

@@ -67,7 +67,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Parquet read whose schema comes from one footer, read on the driver.
 
     ``spark.read.parquet`` starts a Spark job to infer the schema even
@@ -75,11 +75,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     job, so opening a table costs no pass over the shards.  Spark still
     lists the files and discovers ``key=value`` partition columns from
     the paths exactly as before.  Where :func:`_footer_schema` declines,
-    Spark infers as it always did, with the same schema or error.
+    Spark infers as it always did, with the same schema or error.  A list
+    of paths takes its schema from the first.
     """
-    schema = _footer_schema(spark, path)
+    paths = [path] if isinstance(path, str) else list(path)
+    schema = _footer_schema(spark, paths[0])
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return reader.parquet(*paths)
+
+
+def read_side_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """A flat relation kept in a ``.``-named directory (a store's
+    tombstone side table), or ``None`` while it holds no data file.
+
+    Spark's listing treats ``.`` names as hidden: it reads such a root
+    only because the path was given explicitly, and logs "All paths were
+    ignored" for it.  The relation's data files are handed over instead,
+    which reads the same rows."""
+    try:
+        names = sorted(os.listdir(path))
+    except FileNotFoundError:
+        return None
+    files = [os.path.join(path, n) for n in names if n.endswith(".parquet") and not _hidden(n)]
+    return read_parquet(spark, files) if files else None
 
 
 _SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.aggregate import dsum_revenue
 from .sources.readers import Tables
 
 __all__ = ["TPCH_SPECS"]
@@ -51,10 +52,6 @@ _REV_SQL = (
     "CAST(l_extendedprice AS DECIMAL(18,6)) * "
     "(CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6)))"
 )
-
-
-def _dsum_rev() -> F.Column:
-    return F.sum(_rev()).cast("decimal(38,6)").cast("double")
 
 
 def _dsum_rev_sql(expr: str = _REV_SQL) -> str:
@@ -88,7 +85,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(region_nations), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
-        .agg(_dsum_rev().alias("revenue"))
+        .agg(dsum_revenue().alias("revenue"))
     )
 
 
@@ -135,7 +132,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(pair)
         .filter(F.year("l_shipdate").isin(1996, 1997))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(_dsum_rev().alias("revenue"))
+        .agg(dsum_revenue().alias("revenue"))
     )
 
 
@@ -195,7 +192,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(
                 F.sum(nation_rev).cast("decimal(38,6)").cast("double")
-                / _dsum_rev(),
+                / dsum_revenue(),
                 6,
             ).alias("mkt_share")
         )
@@ -243,7 +240,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_returnflag") == "R")
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(_dsum_rev().alias("revenue"))
+        .agg(dsum_revenue().alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
         .limit(20)
     )
@@ -346,7 +343,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < "1996-04-01")
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(_dsum_rev().alias("total_revenue"))
+        .agg(dsum_revenue().alias("total_revenue"))
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     return (
@@ -440,7 +437,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         t.lineitem.join(F.broadcast(t.part), cond)
-        .agg(_dsum_rev().alias("revenue"))
+        .agg(dsum_revenue().alias("revenue"))
     )
 
 
@@ -683,7 +680,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9: profit by supplier nation and order year for one part
     family — amount = revenue − supply cost × quantity, all four terms
     carried in exact decimal until the final (38,6)→double cast (the
-    proven _dsum_rev path; scale reduced before the cast per the DuckDB
+    proven revenue-sum path; scale reduced before the cast per the DuckDB
     drift rule).  part is broadcast; orders⋈lineitem is the one
     fact-fact shuffle pair.  Adaptation: ``p_name LIKE '%red%'``
     (fixture names are '<adj> <noun>'; official is '%green%')."""

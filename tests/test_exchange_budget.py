@@ -10,6 +10,8 @@ import pytest
 from big_data_table_spark.catalog import CATALOG
 from big_data_table_spark.plans import exchange_count
 
+from .conftest import jobs_started
+
 # name -> max shuffle exchanges allowed in the plan
 BUDGET = {
     "q1_pricing_summary": 1,     # partial->final agg
@@ -838,8 +840,11 @@ def test_budget_covers_whole_catalog():
 
 
 @pytest.mark.parametrize("name", sorted(BUDGET))
-def test_exchange_budget(spark, sf_dir, name):
-    df = CATALOG[name].fn(spark, sf_dir)
+def test_exchange_budget(spark, sf_dir, build_jobs, name):
+    """The exchange budget of the built plan.  The build's job count is
+    recorded for ``test_job_budget.py``, which checks it against
+    ``JOB_BUDGET`` without building the entry again."""
+    df, build_jobs[name] = jobs_started(spark, lambda: CATALOG[name].fn(spark, sf_dir))
     n = exchange_count(df)
     assert n <= BUDGET[name], (
         f"{name}: {n} exchanges > budget {BUDGET[name]} — a shuffle crept "

@@ -9,7 +9,14 @@ the sf0.001 fixtures (the larger of a cold and a warm build in one
 session), so a new eager action or a direct schema-inferring read fails
 here.  Lower a budget when a change removes jobs.  Jobs are counted as
 ``StageLog.run`` counts them: a job group around the call, read back
-through the StatusTracker (``conftest.jobs_started``).
+through the StatusTracker (``conftest.jobs_started``).  The exchange-budget
+pass (``test_exchange_budget.py``) builds every entry once and records
+this count, so a full run builds each entry once for both budgets.
+
+Counts of builders with eager multi-stage actions can differ by one
+between builds: AQE materializes the shuffle stages of an action as
+separate jobs, and how many it submits depends on which stage finishes
+first.  ``neardup_bfs_hops`` measures 21 or 22 in the same state.
 """
 
 from __future__ import annotations
@@ -97,11 +104,11 @@ JOB_BUDGET = {
     "decontamination_report": 0,
     "dedup_cascade": 12,
     "dedup_chunk_passages": 0,
-    "dedup_components": 24,
+    "dedup_components": 21,  # 20 measured, +1 for AQE stage timing (24 before: see _minhash_lsh_pairs_fn)
     "dedup_containment_pairs": 7,
     "dedup_crosslingual_pairs": 0,
     "dedup_exact": 0,
-    "dedup_keep_best_quality": 24,
+    "dedup_keep_best_quality": 21,  # 20 measured, +1 for AQE stage timing (same band table)
     "dedup_lsh_recall_report": 16,
     "dedup_minhash_lsh_pairs": 0,
     "dedup_minhash_signature": 0,
@@ -220,7 +227,7 @@ JOB_BUDGET = {
     "multimodal_resize_pipeline": 0,
     "multimodal_wav_decode": 0,
     "nation_balance_report": 0,
-    "neardup_bfs_hops": 22,
+    "neardup_bfs_hops": 22,  # 21 or 22: AQE stage timing in the BFS rounds, not session state
     "neardup_kcore": 35,
     "neardup_source_matrix": 5,
     "neardup_triangle_count": 12,
@@ -411,8 +418,12 @@ def test_fixture_scans_build_without_jobs():
 
 
 @pytest.mark.parametrize("name", sorted(JOB_BUDGET))
-def test_build_job_budget(spark, sf_dir, name):
-    _, n = jobs_started(spark, lambda: CATALOG[name].fn(spark, sf_dir))
+def test_build_job_budget(spark, sf_dir, build_jobs, name):
+    """Checks the jobs the exchange-budget pass counted while building
+    the entry; builds it here only when that pass did not run."""
+    n = build_jobs.get(name)
+    if n is None:
+        _, n = jobs_started(spark, lambda: CATALOG[name].fn(spark, sf_dir))
     assert n <= JOB_BUDGET[name], (
         f"{name}: building started {n} Spark jobs > budget {JOB_BUDGET[name]}"
     )

@@ -245,3 +245,40 @@ def test_lakehouse_stubs_raise_cleanly(spark):
         read_iceberg(spark, "cat.db.t")
     with _pytest.raises(NotImplementedError, match="hudi"):
         read_hudi(spark, "/tmp/nope")
+
+
+def test_side_table_read_without_ignored_paths(spark, tmp_path):
+    """A ``.``-named tombstone relation reads the same rows through its
+    data files, and Spark no longer logs "All paths were ignored" (the
+    warning reading the directory itself logs)."""
+    from big_data_table_spark.sources.readers import read_parquet, read_side_table
+
+    d = str(tmp_path / "store" / ".tombstones")
+    assert read_side_table(spark, d) is None
+    spark.range(5).select(F.col("id").alias("vec_id")).write.parquet(d)
+    spark.range(3, 9, numPartitions=3).select(F.col("id").alias("vec_id")).write.mode(
+        "append"
+    ).parquet(d)
+    # a log4j appender on Spark's DataSource logger collects its warnings
+    jvm = spark.sparkContext._jvm
+    log4j = jvm.org.apache.logging.log4j
+    logger = log4j.LogManager.getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+    sink = jvm.java.io.StringWriter()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        None, None, sink, "side-table-test", False, True
+    )
+    appender.start()
+    old = logger.getLevel()
+    logger.addAppender(appender)
+    logger.setLevel(log4j.Level.WARN)
+    try:
+        want = sorted(r.vec_id for r in read_parquet(spark, d).collect())
+        assert "All paths were ignored" in sink.toString()
+        sink.getBuffer().setLength(0)
+        got = sorted(r.vec_id for r in read_side_table(spark, d).collect())
+        assert "All paths were ignored" not in sink.toString()
+    finally:
+        logger.removeAppender(appender)
+        logger.setLevel(old)
+        appender.stop()
+    assert got == want == sorted([*range(5), *range(3, 9)])
