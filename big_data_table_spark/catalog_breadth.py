@@ -2231,9 +2231,9 @@ def _minhash_lsh_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _crosslingual_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-lingual LSH candidates: the (doc, lang, band, sig) table is
-    computed ONCE and persisted before the self-join (same CTE-inlining
-    countermeasure as `_minhash_lsh_pairs_fn` — the pure-SQL form
-    recomputes the signature AND language pipelines per join side).
+    computed ONCE and persisted before the self-join.  Unpersisted, the
+    self-join plans the signature and language pipelines on each side:
+    7 exchanges against a budget of 5.
     Algorithm/oracle: functions/dedup.py:crosslingual_lsh_pairs_sql."""
     from .functions.text import lang_select_sql
 

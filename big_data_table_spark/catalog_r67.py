@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from .functions import text as X
 from .functions.portable import DUCK, SPARK
+from .operators.aggregate import revenue
 from .sources.readers import FIXTURE_TABLES, Tables, ensure_session_confs, load_table, read_parquet
 from .catalog_base import register_views
 from .catalog_r5 import _ROLLUP_RANGE, _mixture_epochs_pick_ctes
@@ -858,12 +859,9 @@ def parts_abc_analysis_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     li = Tables(spark, sf_dir).lineitem
-    rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
     pr = (
         li.groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(F.sum(rev).cast("decimal(38,6)").alias("rev"))
+        .agg(F.sum(revenue()).cast("decimal(38,6)").alias("rev"))
         .localCheckpoint(eager=True)
     )
     stats = pr.agg(

@@ -91,13 +91,19 @@ def read_side_table(spark: SparkSession, path: str) -> DataFrame | None:
     Spark's listing treats ``.`` names as hidden: it reads such a root
     only because the path was given explicitly, and logs "All paths were
     ignored" for it.  The relation's data files are handed over instead,
-    which reads the same rows."""
+    which reads the same rows.  Spark lists more root paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` with a
+    distributed job, so a side table with more files than that is read
+    as one directory, listed on the driver, warning and all."""
     try:
         names = sorted(os.listdir(path))
     except FileNotFoundError:
         return None
     files = [os.path.join(path, n) for n in names if n.endswith(".parquet") and not _hidden(n)]
-    return read_parquet(spark, files) if files else None
+    if not files:
+        return None
+    threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    return read_parquet(spark, files if len(files) <= threshold else path)
 
 
 _SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"

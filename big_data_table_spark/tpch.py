@@ -35,17 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.aggregate import dsum_revenue
+from .operators.aggregate import dsum_revenue, revenue
 from .sources.readers import Tables
 
 __all__ = ["TPCH_SPECS"]
-
-
-def _rev() -> F.Column:
-    """l_extendedprice * (1 - l_discount) in exact decimal."""
-    return F.col("l_extendedprice").cast("decimal(18,6)") * (
-        F.lit(1).cast("decimal(18,6)") - F.col("l_discount").cast("decimal(18,6)")
-    )
 
 
 _REV_SQL = (
@@ -186,7 +179,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("sn_key"))
     )
     zero = F.lit(0).cast("decimal(18,6)") * F.lit(0).cast("decimal(18,6)")
-    nation_rev = F.when(F.col("supp_nation") == "NATION_5", _rev()).otherwise(zero)
+    nation_rev = F.when(F.col("supp_nation") == "NATION_5", revenue()).otherwise(zero)
     return (
         j.groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
@@ -691,7 +684,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = F.broadcast(
         t.nation.select(F.col("n_nationkey").alias("nk"), F.col("n_name").alias("nation"))
     )
-    amount = _rev().cast("decimal(30,12)") - (
+    amount = revenue().cast("decimal(30,12)") - (
         F.col("ps_supplycost").cast("decimal(18,6)")
         * F.col("l_quantity").cast("decimal(9,2)")
     ).cast("decimal(30,12)")

@@ -282,3 +282,22 @@ def test_side_table_read_without_ignored_paths(spark, tmp_path):
         logger.setLevel(old)
         appender.stop()
     assert got == want == sorted([*range(5), *range(3, 9)])
+
+
+def test_wide_side_table_read_starts_no_job(spark, tmp_path):
+    """Past Spark's parallel-listing threshold, one root path per data
+    file would be listed by a Spark job; the directory read lists on the
+    driver and reads the same rows."""
+    from big_data_table_spark.sources.readers import read_side_table
+
+    from .conftest import jobs_started
+
+    threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    d = str(tmp_path / "store" / ".tombstones")
+    spark.range(threshold + 8, numPartitions=threshold + 8).select(
+        F.col("id").alias("vec_id")
+    ).write.parquet(d)
+    assert sum(n.endswith(".parquet") for n in os.listdir(d)) > threshold
+    df, n = jobs_started(spark, lambda: read_side_table(spark, d))
+    assert n == 0
+    assert sorted(r.vec_id for r in df.collect()) == list(range(threshold + 8))
