@@ -111,7 +111,7 @@ def _unscaled(c: Column, scale: int) -> tuple[Column, Column, Column]:
 
 def _limb_sum(u: Column) -> Column:
     """``sum(u)`` as ``decimal(38,0)``, exact: three long sums of 21-bit
-    limbs of ``u`` (the top one signed; each below 2^21 in magnitude for
+    limbs of ``u`` (the top one signed; each at most 2^21 in magnitude for
     any long), none of which can overflow below 2^42 rows per group;
     recombined once per group."""
     s0 = F.sum(u.bitwiseAND(F.lit(_LIMB_MASK)))
